@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{DaySink, FsUtil, HfpCsvSource, ParquetDaySink}
 
@@ -47,7 +47,8 @@ object HfpLoadJob {
     * come from the secrets-resolved environment (X1,
     * [[graft.sources.SecretsConfig]]) with the reference's exact keys:
     * PGUSER/PGPASSWORD, EVENT_BATCH_SIZE, INSERT_CONCURRENCY
-    * (constants.ts:35-52).
+    * (constants.ts:35-52). INSERT_CONCURRENCY caps the concurrent insert
+    * connections, like the reference's PQueue ([[graft.sources.JdbcSink]]).
     */
   private[graft] def sinkFor(arg: String,
       env: Map[String, String] = sys.env,
@@ -259,7 +260,8 @@ object HfpLoadJob {
             sink.existingKeys(spark, "vehicleposition", date)
               .union(sink.existingKeys(spark, "unsignedevent", date))
           else sink.existingKeys(spark, table, date)
-        val (buildSide, unpin) = pinnedBuildSide(rawBuild)
+        val (buildSide, unpin) =
+          pinnedBuildSide(rawBuild, s"the key snapshot ($group/$date)")
         try runOverlapped(routes) { case (targetTable, df) =>
           // r16 (guide §1.4/§5): ONE action per route — the appended-row
           // count rides the write itself as an observed metric, so the
@@ -271,25 +273,9 @@ object HfpLoadJob {
           // INSERT on JDBC; a _SUCCESS-only dir on parquet, which the
           // `oday=*` existence probes already handle — NOTES #56b).
           val fresh = df.join(buildSide, Seq("uuid"), "left_anti")
-          val obs = org.apache.spark.sql.Observation()
+          val obs = Observation()
           sink.append(fresh.observe(obs, count(lit(1)).as("n")), targetTable)
-          // r17 (ADVICE): bounded wait — if a sink ever completes the
-          // append without executing the observed plan (empty-frame
-          // short-circuit, V2/streaming write, metric-propagation
-          // regression), fail loudly naming the route instead of
-          // hanging forever on Observation.get. The append above has
-          // already returned, so a healthy metric arrives ~immediately;
-          // 60 s is pure slack.
-          val row =
-            try scala.concurrent.Await.result(obs.future,
-              scala.concurrent.duration.Duration(60, "s"))
-            catch { case _: java.util.concurrent.TimeoutException =>
-              throw new IllegalStateException(
-                s"observed row count for route '$targetTable' ($group/$date) " +
-                  "never arrived: the sink completed the append without " +
-                  "executing the observed plan")
-            }
-          val n = row.getAs[Long]("n")
+          val n = observedCount(obs, s"route '$targetTable' ($group/$date)")
           results.merge(targetTable, n, (a, b) => a + b)
           ()
         } finally {
@@ -301,6 +287,19 @@ object HfpLoadJob {
     import scala.jdk.CollectionConverters._
     results.asScala.toMap
   }
+
+  /** The row count an action observed as `n`. The wait is bounded: an
+    * action that completed without executing the observed plan fails
+    * loudly naming `what`; a healthy metric arrives ~immediately.
+    */
+  private def observedCount(obs: Observation, what: String): Long =
+    try scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(60, "s")).getAs[Long]("n")
+    catch { case _: java.util.concurrent.TimeoutException =>
+      throw new IllegalStateException(s"observed row count for $what " +
+        "never arrived: the action completed without executing the " +
+        "observed plan")
+    }
 
   /** Estimated broadcast bytes per key row: a 36-char uuid is ~56 bytes
     * as an UnsafeRow (8B null bits + 8B offset/len word + padded
@@ -340,19 +339,22 @@ object HfpLoadJob {
     * arrives in both VP routes within one run; the reference inserts
     * both, hfpTask.ts:97-111). The checkpoint cuts lineage: the key set
     * becomes materialized rows with no file source left in the plan for
-    * the refresh to touch. The count doubles as the build-side
-    * statistic a JDBC relation never has, so small key sets get an
-    * explicit broadcast for the anti-join.
+    * the refresh to touch. The row count, observed on the checkpoint's
+    * own job, doubles as the build-side statistic a JDBC relation never
+    * has, so small key sets get an explicit broadcast for the anti-join.
     */
-  private[graft] def pinnedBuildSide(raw: DataFrame): (DataFrame, () => Unit) = {
+  private[graft] def pinnedBuildSide(raw: DataFrame,
+      what: String = "the key snapshot"): (DataFrame, () => Unit) = {
     // Failure-mode trade, chosen deliberately: a checkpoint block lost
     // to executor decommissioning (e.g. dynamic allocation) ABORTS the
     // group instead of recomputing — and that is the correct side,
     // because a recompute would observe the routes' own appends and
     // silently drop rows (wrong results), while the load is idempotent
     // and a re-run heals an abort.
-    val pinned = raw.localCheckpoint() // eager: materializes + cuts lineage
-    val n = pinned.count()
+    val obs = Observation()
+    // eager: materializes, cuts lineage, and delivers the row count
+    val pinned = raw.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    val n = observedCount(obs, what)
     // free the checkpointed blocks once the routes are written — safe
     // because nothing reads the frame afterwards (a checkpointed RDD
     // cannot be recomputed once its blocks are gone)

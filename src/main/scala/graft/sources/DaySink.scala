@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Where a day-load reads its per-day dedup keys and appends rows —
   * the seam between [[graft.jobs.HfpLoadJob.loadDay]]'s orchestration
@@ -27,11 +27,15 @@ trait DaySink {
 }
 
 object DaySink {
+  /** Parquet key-read schema: no footer-inference job, and `oday` stays
+    * a partition column, so day filters still prune.
+    */
+  private[graft] val keySchema = StructType.fromDDL("uuid STRING, oday DATE")
+
   /** Empty `uuid` frame for sinks whose table doesn't exist yet. */
-  private[sources] def emptyKeys(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("uuid", StringType))))
+  private[graft] def emptyKeys(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], keySchema)
+      .select("uuid")
 }
 
 /** Parquet warehouse twin: one directory per table, `oday=` partitioned
@@ -53,7 +57,7 @@ final case class ParquetDaySink(dir: String) extends DaySink {
     // zero-row append leaves a _SUCCESS-only dir that exists but has no
     // schema to infer
     if (FsUtil.globNonEmpty(spark, s"$path/oday=*"))
-      spark.read.parquet(path)
+      spark.read.schema(DaySink.keySchema).parquet(path)
         .where(col("oday") === lit(date)) // partition-pruned
         .select("uuid")
     else DaySink.emptyKeys(spark)

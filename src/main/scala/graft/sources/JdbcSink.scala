@@ -10,9 +10,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * INSERTs with bounded concurrency.
   *
   * The mapping that replaces the reference's hand-rolled machinery:
-  *  - `INSERT_CONCURRENCY` (bounded PQueue)  → `numPartitions` (one
-  *    JDBC connection per partition; Spark's task scheduler IS the
-  *    bounded queue — no unbounded buffering exists to begin with)
+  *  - `INSERT_CONCURRENCY` (bounded PQueue)  → `numPartitions`, an upper
+  *    bound: a `coalesce`, one JDBC connection per partition, no shuffle.
+  *    More upstream splits run scan+cast+insert in `numPartitions` tasks,
+  *    the trade Spark's own JDBC writer makes; inserts are database-bound
   *  - `EVENT_BATCH_SIZE` (rows per INSERT)   → `batchsize` option
   *    (executeBatch under the hood)
   *  - `item[key] || null` falsy→NULL netting → already folded into the
@@ -51,9 +52,12 @@ object JdbcSink {
       .where(org.apache.spark.sql.functions.col("oday") === oday)
       .select("uuid")
 
-  /** K1/K2: batched, concurrent INSERT append. */
+  /** K1/K2: batched INSERT append on at most `numPartitions` connections.
+    * Not the writer's `numPartitions` option: it probes `df.rdd` in a
+    * separate execution, from which an `Observation` on `df` fires 0.
+    */
   def write(df: DataFrame, cfg: Config): Unit =
-    df.repartition(cfg.numPartitions)
+    df.coalesce(cfg.numPartitions)
       .write
       .mode(SaveMode.Append)
       .option("batchsize", cfg.batchSize.toString)

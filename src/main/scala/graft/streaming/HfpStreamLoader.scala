@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.sources.{HfpCsvSource, JdbcSink}
+import graft.sources.{DaySink, HfpCsvSource, JdbcSink}
 
 /** The reference's loader as a continuous service: the same wire
   * schema, cast layer, key filter, and routing as the batch
@@ -45,7 +45,7 @@ object HfpStreamLoader {
     typed.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
+      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val s = batch0.sparkSession
         // pin the batch: the oday probe, each route's anti-join and the
         // write would otherwise each re-run the CSV scan + cast
@@ -76,19 +76,11 @@ object HfpStreamLoader {
                 existingKeys(s, sinkDir, "vehicleposition", odays, withNullOday)
                   .union(existingKeys(s, sinkDir, "unsignedevent", odays, withNullOday))
               else existingKeys(s, sinkDir, routes.head._1, odays, withNullOday)
-            // pinned (eager localCheckpoint) like the batch path: the
-            // VP group's second route would otherwise re-scan the sink
-            // at its own action and observe route 1's just-appended
-            // keys, dropping a uuid that arrives in both routes within
-            // one batch. The file source's frozen listing does NOT
-            // protect this — route 1's append refreshes every plan
-            // over the written path (refreshByPath), and the refreshed
-            // relation re-lists the directory; the checkpoint leaves no
-            // file source in the plan for the refresh to touch. The
-            // count also licenses the broadcast hint for small key
-            // sides.
-            val (buildSide, unpin) =
-              graft.jobs.HfpLoadJob.pinnedBuildSide(rawBuild)
+            // pinned like the batch path (see pinnedBuildSide): route 1's
+            // append would otherwise refresh a lazy key scan, and route 2
+            // would drop a uuid that arrives in both VP routes
+            val (buildSide, unpin) = graft.jobs.HfpLoadJob.pinnedBuildSide(
+              rawBuild, s"the key snapshot ($group, micro-batch $batchId)")
             try routes.foreach { case (table, df) =>
               val fresh = df.join(buildSide, Seq("uuid"), "left_anti")
               if (!fresh.isEmpty) JdbcSink.writeParquet(fresh, sinkDir, table)
@@ -121,12 +113,8 @@ object HfpStreamLoader {
         col("oday").isin(odays: _*) else lit(false)
       val keyFilter = if (includeNullOday)
         dayFilter || col("oday").isNull else dayFilter
-      spark.read.parquet(path).where(keyFilter).select("uuid")
-    } else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("uuid",
-            org.apache.spark.sql.types.StringType))))
+      spark.read.schema(DaySink.keySchema).parquet(path)
+        .where(keyFilter).select("uuid")
+    } else DaySink.emptyKeys(spark)
   }
 }

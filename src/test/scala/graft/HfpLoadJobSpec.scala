@@ -96,17 +96,12 @@ class HfpLoadJobSpec extends SparkSuite {
         assert(p.contains("Join LeftAnti") || p.contains("BroadcastHashJoin"),
           p.take(800))
       }
-      // and no standalone count action re-executed a route: every
-      // captured `count` touches neither the CSV source nor the cached
-      // VP cast (the only count left in loadDay is the pinned build
-      // side's, which runs over a checkpointed LogicalRDD)
-      val counts = plans.synchronized {
-        plans.filter(_._1 == "count").map(_._2)
-      }
-      counts.foreach { p =>
-        assert(!p.contains("Scan csv") && !p.contains("InMemoryTableScan"),
-          p.take(800))
-      }
+      // and loadDay runs no count action at all: the routes' counts ride
+      // their writes, and each group's key-snapshot count rides its one
+      // eager localCheckpoint (three populated groups, three snapshots)
+      val actions = plans.synchronized(plans.map(_._1).toList)
+      assert(!actions.contains("count"), actions.mkString(", "))
+      assert(actions.count(_ == "localCheckpoint") == 3, actions.mkString(", "))
     } finally sc.listenerManager.unregister(listener)
   }
 
@@ -187,6 +182,60 @@ class HfpLoadJobSpec extends SparkSuite {
     assert(third("stopevent") == 1L && third.values.sum == 1L)
     assert(spark.read.jdbc(url, "stopevent", new java.util.Properties())
       .count() == 3L)
+  }
+
+  test("JDBC sink with every anti-join shuffled: returned counts equal the rows each table gained") {
+    import graft.sources.{HfpCsvSource, JdbcDaySink, JdbcSink}
+    // Auto-broadcast off, so every route's anti-join shuffles under AQE.
+    // This pins the failure of a writer that runs the plan in an extra
+    // execution before inserting (Spark's own `numPartitions` option
+    // probes `df.rdd`): the route's observed count then fires from that
+    // execution as 0 while the insert still lands rows. The returned
+    // counts must equal each table's actual COUNT(*) delta, both when the
+    // sink coalesces below the shuffle's partitions and when it does not.
+    val url = "jdbc:derby:memory:graftshuffled;create=true"
+    val tables = Seq("stopevent", "otherevent", "vehicleposition", "unsignedevent")
+    def rowCounts(): Map[String, Long] = {
+      val conn = java.sql.DriverManager.getConnection(url)
+      try tables.map { t =>
+        val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $t")
+        try { rs.next(); t -> rs.getLong(1) } finally rs.close()
+      }.toMap
+      finally conn.close()
+    }
+    val conn = java.sql.DriverManager.getConnection(url)
+    try tables.foreach { t =>
+      try conn.createStatement().execute(JdbcSink.createTableDdl(
+        t, HfpCsvSource.columns, HfpCsvSource.castTypes))
+      catch { case _: java.sql.SQLException => () }
+    } finally conn.close()
+    val root = writeArchive()
+    val before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      def loadAndCheck(numPartitions: Int, expected: Map[String, Long]): Unit = {
+        val start = rowCounts()
+        val got = HfpLoadJob.loadDay(sc, root,
+          JdbcDaySink(url, batchSize = 50, numPartitions = numPartitions), date)
+        val end = rowCounts()
+        assert(got == expected, got.toString)
+        tables.foreach { t =>
+          assert(got.getOrElse(t, 0L) == end(t) - start(t),
+            s"$t: returned ${got.getOrElse(t, 0L)}, table gained ${end(t) - start(t)}")
+        }
+      }
+      loadAndCheck(1, Map("stopevent" -> 2L, "otherevent" -> 1L,
+        "vehicleposition" -> 2L, "unsignedevent" -> 1L))
+      // late rows in two groups, loaded with more connections than splits
+      Files.writeString(Paths.get(root, "csv", "StopEvent", s"$date-1.csv"),
+        row(Map("uuid" -> "s7", "oday" -> date)) + "\n")
+      Files.writeString(Paths.get(root, "csv", "VehiclePosition", s"$date-1.csv"),
+        Seq(row(Map("uuid" -> "v7", "oday" -> date, "journey_type" -> "journey")),
+          row(Map("uuid" -> "v8", "oday" -> date, "journey_type" -> "deadrun")))
+          .mkString("\n") + "\n")
+      loadAndCheck(100, Map("stopevent" -> 1L, "otherevent" -> 0L,
+        "vehicleposition" -> 1L, "unsignedevent" -> 1L))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
   }
 
   test("bootstrapDdl: loadDay against a ZERO-table database creates its tables from the generator") {

@@ -49,6 +49,48 @@ class JdbcSinkSpec extends SparkSuite {
     assert(JdbcSink.readKeys(spark, cfg, "2021-02-09").count() == 101)
   }
 
+  test("append bounds concurrency by coalescing: no shuffle, at most numPartitions tasks") {
+    // INSERT_CONCURRENCY caps the concurrent connections (the reference's
+    // PQueue); it must not force that many tasks, nor a shuffle to make
+    // them. 8 upstream splits written with numPartitions = 2 insert in
+    // at most 2 tasks, straight off the source.
+    val conn = java.sql.DriverManager.getConnection(url)
+    try conn.createStatement().execute(
+      "CREATE TABLE coalesce_rows (uuid VARCHAR(64), oday VARCHAR(16), value DOUBLE)")
+    catch { case _: java.sql.SQLException => () }
+    finally conn.close()
+    val df = spark.range(0, 80, 1, 8).select(
+      concat(lit("c"), col("id").cast("string")).as("uuid"),
+      lit("2021-02-09").as("oday"), col("id").cast("double").as("value"))
+    assert(df.rdd.getNumPartitions == 8)
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.SaveIntoDataSourceCommand
+    // the query the JDBC writer executes, captured from its save command
+    val plans = scala.collection.mutable.ArrayBuffer[LogicalPlan]()
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, d: Long): Unit =
+        qe.logical.collectFirst { case c: SaveIntoDataSourceCommand => c.query }
+          .foreach(q => plans.synchronized { plans += q })
+      override def onFailure(funcName: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    sc.listenerManager.register(qel)
+    val (_, stages, tasks) =
+      try launched {
+        JdbcSink.write(df, cfg.copy(table = "coalesce_rows", numPartitions = 2))
+      } finally sc.listenerManager.unregister(qel)
+    assert(tasks.nonEmpty && tasks.size <= 2, s"insert ran ${tasks.size} tasks")
+    assert(stages.size == 1 && tasks.forall(_ == "ResultTask"),
+      stages.map(s => s"${s.stageId}:${s.name}").mkString("; ") + " / " + tasks)
+    // the physical plan the writer executes carries no Exchange
+    assert(plans.size == 1, plans.mkString("\n"))
+    val executed = spark.sessionState.executePlan(plans.head).executedPlan.toString
+    assert(!executed.contains("Exchange"), executed)
+    assert(spark.read.jdbc(url, "coalesce_rows", new java.util.Properties())
+      .count() == 80L)
+  }
+
   test("pinned small key side broadcasts the anti-join through the Derby sink") {
     import spark.implicits._
     // a JDBC relation reports NO statistics, so Spark alone never

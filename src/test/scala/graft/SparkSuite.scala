@@ -20,4 +20,41 @@ trait SparkSuite extends AnyFunSuite {
   val sfDir = "/root/testdata/sf0.001"
 
   def sc = { spark.sparkContext.setLogLevel("WARN"); spark }
+
+  /** Runs `body` under a job group of its own and returns what it made
+    * Spark launch: the stages of its jobs and the type of every task
+    * that ran (`ShuffleMapTask` or `ResultTask`). Listener delivery is
+    * asynchronous, so a marker job in another group runs after `body`;
+    * once its start is delivered, every event `body` caused has been too.
+    */
+  def launched[A](body: => A): (A, Seq[org.apache.spark.scheduler.StageInfo], Seq[String]) = {
+    import org.apache.spark.scheduler._
+    val ctx = spark.sparkContext
+    val group = s"launched-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val stages = new java.util.concurrent.ConcurrentHashMap[Int, StageInfo]()
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => e.stageInfos.foreach(s => stages.put(s.stageId, s))
+          case Some(`marker`) => flushed.countDown()
+          case _ => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.containsKey(e.stageId)) tasks.add(e.taskType)
+    }
+    ctx.addSparkListener(listener)
+    try {
+      ctx.setJobGroup(group, group)
+      val result = try body finally ctx.clearJobGroup()
+      ctx.setJobGroup(marker, marker)
+      try ctx.parallelize(Seq(1), 1).count() finally ctx.clearJobGroup()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the marker job")
+      import scala.jdk.CollectionConverters._
+      (result, stages.values.asScala.toSeq.sortBy(_.stageId), tasks.asScala.toSeq)
+    } finally ctx.removeSparkListener(listener)
+  }
 }
