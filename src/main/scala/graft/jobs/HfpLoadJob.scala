@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.sources.{DaySink, FsUtil, HfpCsvSource, ParquetDaySink}
 
 /** The reference's whole day-load orchestration (hfpTask.ts:13-151) as
@@ -156,17 +157,17 @@ object HfpLoadJob {
     * interrupted) — the load is idempotent and a re-run heals a partial
     * day, the same failure contract as the sequential shape.
     */
-  private def runOverlapped[A](items: Seq[A])(f: A => Unit): Unit =
-    if (items.lengthCompare(1) <= 0) items.foreach(f)
+  private def runOverlapped[A, B](items: Seq[A])(f: A => B): Seq[B] =
+    if (items.lengthCompare(1) <= 0) items.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(items.size)
       try {
         val futures = items.map { i =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = f(i)
+          pool.submit(new java.util.concurrent.Callable[B] {
+            override def call(): B = f(i)
           })
         }
-        futures.foreach { fut =>
+        futures.map { fut =>
           try fut.get()
           catch { case e: java.util.concurrent.ExecutionException =>
             throw e.getCause }
@@ -188,19 +189,12 @@ object HfpLoadJob {
     * table(s), and each group's dedup snapshot reads only those same
     * tables (VP reads vehicleposition+unsignedevent — both written by
     * VP alone), so no group can observe another group's appends in
-    * either order. Within a group the two VP routes also overlap: both
-    * anti-join the SAME pinned key snapshot (frozen before either write
-    * starts, exactly the read isolation the reference's sequential
-    * writes rely on), and they append to different tables. Concurrent
-    * inserts are reference behavior, not a liberty — the reference
-    * itself writes with INSERT_CONCURRENCY=100 (constants.ts:35-52).
-    * Rows-per-table and idempotency are byte-identical to the
-    * sequential shape (pinned by HfpLoadJobSpec, incl. the cross-group
-    * same-uuid case).
+    * either order. Rows-per-table and idempotency are byte-identical to
+    * the sequential shape (pinned by HfpLoadJobSpec, incl. the
+    * cross-group same-uuid case).
     */
   def loadDay(spark: SparkSession, csvRoot: String, sink: DaySink,
       date: String, includeLightPriority: Boolean = false): Map[String, Long] = {
-    val results = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     val dayGroups =
       if (includeLightPriority) groups :+ lightPriorityGroup else groups
     // S1 blob-list analog, probed up front in the fixed group order:
@@ -217,75 +211,81 @@ object HfpLoadJob {
       (group, table, FsUtil.escapeGlob(s"$csvRoot/csv/$group/$date") + "*")
     }.filter { case (_, _, pattern) => FsUtil.globNonEmpty(spark, pattern) }
     runOverlapped(present) { case (group, table, pattern) =>
-      {
-        val isTlp = group == lightPriorityGroup._1
-        val raw =
-          if (isTlp) HfpCsvSource.readLightPriority(spark, pattern)
-          else HfpCsvSource.read(spark, pattern)
-        // r17 note: hash-spreading the wire rows on uuid before the
-        // cast layer was A/B'd (the single-split day CSV makes every
-        // route stage one task, event-log profiled) and measured 2×
-        // SLOWER end-to-end (warm-fixture subset bench 4.1 → 8.9 s):
-        // shuffling 44 raw string columns costs more than the serial
-        // cast it parallelizes at this file size. At 100 TB the day
-        // files exceed maxPartitionBytes and split naturally, so the
-        // serial-scan shape is a test-scale artifact the data itself
-        // fixes. Kept serial deliberately.
-        val typed0 = (if (isTlp) HfpCsvSource.castAllLightPriority(raw)
-          else HfpCsvSource.castAll(raw))
-          .where(col("uuid").isNotNull && col("uuid") =!= "") // C4
-        // the VP group feeds TWO routes — persist so the CSV scan+cast
-        // runs once for both, not once per route
-        val typed =
-          if (group == "VehiclePosition") typed0.persist() else typed0
-        // C5 routing: only the VP group splits
-        val routes: Seq[(String, DataFrame)] =
-          if (group == "VehiclePosition")
-            Seq(
-              "vehicleposition" -> typed.where(col("journey_type") === "journey"),
-              "unsignedevent" -> typed.where(
-                col("journey_type").isNull || col("journey_type") =!= "journey"))
-          else Seq(table -> typed)
-        // A1 build side, read BEFORE writes start; VP unions both tables.
-        // PINNED (eager localCheckpoint) so the key set is frozen at
-        // group start, matching the reference's snapshot-then-write
-        // order (hfpTask.ts:97-111): a lazy frame would re-run the key
-        // scan at route 2's action and observe route 1's just-appended
-        // keys, dropping a uuid that appears in BOTH VP routes within
-        // one run (the reference inserts both rows) — see
-        // [[pinnedBuildSide]] for why a persist+count pin is not enough
-        // against the parquet sink.
-        val rawBuild =
-          if (group == "VehiclePosition")
-            sink.existingKeys(spark, "vehicleposition", date)
-              .union(sink.existingKeys(spark, "unsignedevent", date))
-          else sink.existingKeys(spark, table, date)
-        val (buildSide, unpin) =
-          pinnedBuildSide(rawBuild, s"the key snapshot ($group/$date)")
-        try runOverlapped(routes) { case (targetTable, df) =>
-          // r16 (guide §1.4/§5): ONE action per route — the appended-row
-          // count rides the write itself as an observed metric, so the
-          // scan+cast+anti-join streams straight into the sink. The old
-          // persist→count→append shape ran two jobs per route and
-          // round-tripped every fresh row through the block store; at
-          // 100 TB that cache write/read is a full extra copy of the
-          // day. A zero-row route now issues a zero-row append (a no-op
-          // INSERT on JDBC; a _SUCCESS-only dir on parquet, which the
-          // `oday=*` existence probes already handle — NOTES #56b).
-          val fresh = df.join(buildSide, Seq("uuid"), "left_anti")
-          val obs = Observation()
-          sink.append(fresh.observe(obs, count(lit(1)).as("n")), targetTable)
-          val n = observedCount(obs, s"route '$targetTable' ($group/$date)")
-          results.merge(targetTable, n, (a, b) => a + b)
-          ()
-        } finally {
-          unpin()
-          if (group == "VehiclePosition") typed.unpersist(blocking = false)
-        }
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    results.asScala.toMap
+      // Hash-spreading the wire rows on uuid before the cast layer was
+      // A/B'd (the single-split day CSV makes every route stage one
+      // task, event-log profiled) and measured 2× SLOWER end-to-end
+      // (warm-fixture subset bench 4.1 → 8.9 s): shuffling 44 raw string
+      // columns costs more than the serial cast it parallelizes at this
+      // file size. At 100 TB the day files exceed maxPartitionBytes and
+      // split naturally, so the serial-scan shape is a test-scale
+      // artifact the data itself fixes. Kept serial deliberately.
+      val typed =
+        if (group == lightPriorityGroup._1)
+          HfpCsvSource.castAllLightPriority(HfpCsvSource.readLightPriority(spark, pattern))
+        else HfpCsvSource.castAll(HfpCsvSource.read(spark, pattern))
+      loadGroup(typed, group, table, sink, Seq(date), s"$group/$date")
+    }.flatten.toMap
+  }
+
+  /** The load core both loaders run for one event group: C4 key filter,
+    * C5 routing, the dedup anti-join against a key snapshot frozen
+    * before any write, and the append. `days` scopes the snapshot
+    * ([[DaySink.existingKeys]]); `what` names the group and its unit of
+    * work (day or micro-batch) in failures. Returns rows appended per
+    * table.
+    *
+    * Within the group the two VP routes overlap: both anti-join the SAME
+    * pinned key snapshot (frozen before either write starts, exactly the
+    * read isolation the reference's sequential writes rely on), and they
+    * append to different tables. Concurrent inserts are reference
+    * behavior, not a liberty — the reference itself writes with
+    * INSERT_CONCURRENCY=100 (constants.ts:35-52).
+    */
+  private[graft] def loadGroup(typed0: DataFrame, group: String, table: String,
+      sink: DaySink, days: Seq[String], what: String): Map[String, Long] = {
+    val spark = typed0.sparkSession
+    val isVp = group == "VehiclePosition"
+    val keyed = typed0.where(col("uuid").isNotNull && col("uuid") =!= "") // C4
+    // the VP group feeds TWO routes — persist so the CSV scan+cast runs
+    // once for both, not once per route; a caller's already-cached input
+    // (the stream's micro-batch) serves both routes as it is
+    val pin = isVp && typed0.storageLevel == StorageLevel.NONE
+    val typed = if (pin) keyed.persist() else keyed
+    // C5 routing: only the VP group splits
+    val routes: Seq[(String, DataFrame)] =
+      if (isVp)
+        Seq(
+          "vehicleposition" -> typed.where(col("journey_type") === "journey"),
+          "unsignedevent" -> typed.where(
+            col("journey_type").isNull || col("journey_type") =!= "journey"))
+      else Seq(table -> typed)
+    // A1 build side, read BEFORE writes start; VP unions both tables.
+    // PINNED (eager localCheckpoint) so the key set is frozen at group
+    // start, matching the reference's snapshot-then-write order
+    // (hfpTask.ts:97-111): a lazy frame would re-run the key scan at
+    // route 2's action and observe route 1's just-appended keys,
+    // dropping a uuid that appears in BOTH VP routes within one run (the
+    // reference inserts both rows) — see [[pinnedBuildSide]] for why a
+    // persist+count pin is not enough against the parquet sink.
+    val rawBuild = routes.map { case (t, _) => sink.existingKeys(spark, t, days: _*) }
+      .reduce(_ union _)
+    try {
+      val (buildSide, unpin) = pinnedBuildSide(rawBuild, s"the key snapshot ($what)")
+      try runOverlapped(routes) { case (targetTable, df) =>
+        // ONE action per route: the appended-row count rides the write
+        // itself as an observed metric, so the scan+cast+anti-join
+        // streams straight into the sink. Counting first would run two
+        // jobs per route, and caching the fresh rows for it would be a
+        // full extra copy of the day. A zero-row route issues a zero-row
+        // append (a no-op INSERT on JDBC; a _SUCCESS-only dir on parquet,
+        // which the `oday=*` existence probes already handle — NOTES #56b).
+        val fresh = df.join(buildSide, Seq("uuid"), "left_anti")
+        val obs = Observation()
+        sink.append(fresh.observe(obs, count(lit(1)).as("n")), targetTable)
+        targetTable -> observedCount(obs, s"route '$targetTable' ($what)")
+      }.toMap
+      finally unpin()
+    } finally if (pin) typed.unpersist(blocking = false)
   }
 
   /** The row count an action observed as `n`. The wait is bounded: an

@@ -1,26 +1,30 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-/** Where a day-load reads its per-day dedup keys and appends rows —
-  * the seam between [[graft.jobs.HfpLoadJob.loadDay]]'s orchestration
-  * (fixed group order, read-isolated build side, routing) and the
-  * storage backing it. The reference's sink is Postgres (upsert.ts:6-55
-  * writes, getEvents.ts:9-16 key scans); the harness twin is a
-  * partitioned parquet warehouse. Both implement the same two-method
-  * contract so the flagship job composition is identical — and tested —
-  * against each.
+/** Where a load reads its dedup keys and appends rows — the seam
+  * between the load core ([[graft.jobs.HfpLoadJob.loadGroup]]: routing,
+  * read-isolated build side, anti-join), which both the day job and
+  * [[graft.streaming.HfpStreamLoader]] run, and the storage backing it.
+  * The reference's sink is Postgres (upsert.ts:6-55 writes,
+  * getEvents.ts:9-16 key scans); the harness twin is a partitioned
+  * parquet warehouse. Both implement the same two-method contract, so
+  * both loaders run — and are tested — against each.
   */
 trait DaySink {
 
-  /** S3: the "already inserted for this operating day" key set —
-    * projection (`uuid`) and predicate (`oday = date`) pushed to the
-    * store. Must return an empty one-column frame when the table has
-    * no data yet.
+  /** S3: the "already inserted" key set — the uuids whose `oday` is one
+    * of `days` (the day job passes its one day, a micro-batch the days
+    * it carries) or is NULL, with projection and predicate pushed to
+    * the store. NULL-`oday` keys are always read: a row whose `oday`
+    * casts to NULL is stored under no day, and without them every
+    * re-run would append it again (the reference reads `oday = $1`
+    * only, getEvents.ts:13). Must return an empty one-column frame when
+    * the table has no data yet.
     */
-  def existingKeys(spark: SparkSession, table: String, date: String): DataFrame
+  def existingKeys(spark: SparkSession, table: String, days: String*): DataFrame
 
   /** K1/K2: append the freshly-deduped rows to the table. */
   def append(df: DataFrame, table: String): Unit
@@ -36,6 +40,13 @@ object DaySink {
   private[graft] def emptyKeys(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], keySchema)
       .select("uuid")
+
+  /** The [[DaySink.existingKeys]] rule as a predicate on `oday`. A
+    * one-day `IN` is optimized to `=`, so the day job's key read keeps
+    * its single-day shape plus the NULL clause.
+    */
+  private[graft] def onDays(days: Seq[String]): Column =
+    col("oday").isin(days: _*) || col("oday").isNull
 }
 
 /** Parquet warehouse twin: one directory per table, `oday=` partitioned
@@ -48,7 +59,7 @@ object DaySink {
 final case class ParquetDaySink(dir: String) extends DaySink {
 
   override def existingKeys(spark: SparkSession, table: String,
-      date: String): DataFrame = {
+      days: String*): DataFrame = {
     // escape the warehouse prefix so a dir containing glob
     // metacharacters stays literal in both the probe pattern and the
     // reader (Spark resolves read paths with the same glob grammar)
@@ -58,7 +69,7 @@ final case class ParquetDaySink(dir: String) extends DaySink {
     // schema to infer
     if (FsUtil.globNonEmpty(spark, s"$path/oday=*"))
       spark.read.schema(DaySink.keySchema).parquet(path)
-        .where(col("oday") === lit(date)) // partition-pruned
+        .where(DaySink.onDays(days)) // partition-pruned
         .select("uuid")
     else DaySink.emptyKeys(spark)
   }
@@ -138,9 +149,9 @@ final case class JdbcDaySink(
     JdbcSink.Config(url, table, user, password, batchSize, numPartitions)
 
   override def existingKeys(spark: SparkSession, table: String,
-      date: String): DataFrame = {
+      days: String*): DataFrame = {
     ensureTable(table)
-    JdbcSink.readKeys(spark, cfg(table), date)
+    JdbcSink.readKeys(spark, cfg(table), days: _*)
   }
 
   override def append(df: DataFrame, table: String): Unit = {

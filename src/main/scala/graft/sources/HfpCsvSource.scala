@@ -49,11 +49,11 @@ object HfpCsvSource {
     * (reference: postgres_schema.sql:1-61): the 44 wire columns plus 13
     * traffic-light-priority fields. NO reference code path reads or
     * writes that table — the event-group map (utils/hfp.ts:54-58) only
-    * routes StopEvent/OtherEvent/VehiclePosition — so the engine
-    * declares the schema for parity but intentionally registers no
-    * route to it. If an upstream ever emits a LightPriorityEvent group,
-    * add it to [[graft.jobs.HfpLoadJob.groups]] with this column list;
-    * everything else (cast layer, dedup, sink) already generalizes.
+    * routes StopEvent/OtherEvent/VehiclePosition — so the route is
+    * opt-in: [[graft.jobs.HfpLoadJob.lightPriorityGroup]], loaded by
+    * `loadDay(..., includeLightPriority = true)` with this column list.
+    * It is not in [[graft.jobs.HfpLoadJob.groups]], so the stream loader
+    * rejects the group.
     */
   val lightPriorityEventColumns: Seq[String] = columns ++ Seq(
     "tlp_requestid", "tlp_requesttype", "tlp_prioritylevel", "tlp_reason",
@@ -100,25 +100,30 @@ object HfpCsvSource {
   def readLightPriority(spark: SparkSession, path: String): DataFrame =
     read(spark, path, lightPriorityEventColumns, lightPriorityRawSchema)
 
+  /** Streaming twin of [[read]]: every CSV file that arrives in `dir`,
+    * with the same options and the same all-empty-row filter.
+    */
+  private[graft] def readStream(spark: SparkSession, dir: String): DataFrame =
+    nonEmptyRows(spark.readStream.schema(rawSchema).options(options).csv(dir), columns)
+
+  private val options = Map(
+    "header" -> "false",
+    "sep" -> ",",
+    "quote" -> "\"",
+    "ignoreLeadingWhiteSpace" -> "true",
+    "ignoreTrailingWhiteSpace" -> "true",
+    "mode" -> "PERMISSIVE")
+
   private def read(spark: SparkSession, path: String, cols: Seq[String],
-      schema: StructType): DataFrame = {
-    val raw = spark.read
-      .schema(schema)
-      .option("header", "false")
-      .option("sep", ",")
-      .option("quote", "\"")
-      .option("ignoreLeadingWhiteSpace", "true")
-      .option("ignoreTrailingWhiteSpace", "true")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-    // skip_lines_with_empty_values: drop rows where every field is
-    // NULL/empty (all-empty record). Spark already drops fully-empty
-    // physical lines.
-    val anyValue = cols
-      .map(c => col(c).isNotNull && col(c) =!= "")
-      .reduce(_ || _)
-    raw.where(anyValue)
-  }
+      schema: StructType): DataFrame =
+    nonEmptyRows(spark.read.schema(schema).options(options).csv(path), cols)
+
+  /** skip_lines_with_empty_values: drop rows where every field is
+    * NULL/empty (all-empty record). Spark already drops fully-empty
+    * physical lines.
+    */
+  private def nonEmptyRows(raw: DataFrame, cols: Seq[String]): DataFrame =
+    raw.where(cols.map(c => col(c).isNotNull && col(c) =!= "").reduce(_ || _))
 
   /** The C3×K2 cast projection over the wire layer → typed DataFrame
     * (the HfpCasts builders applied per the cast-type table).

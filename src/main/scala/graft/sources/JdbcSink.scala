@@ -44,12 +44,13 @@ object JdbcSink {
   }
 
   /** S3: key scan with pushed projection + predicate. Spark's JDBC
-    * source pushes both `where` and `select` down to the database —
-    * the same `SELECT uuid WHERE oday = ?` the reference issues.
+    * source pushes both `where` and `select` down to the database: the
+    * reference's `SELECT uuid WHERE oday = ?`, plus `OR oday IS NULL`
+    * ([[DaySink.existingKeys]]).
     */
-  def readKeys(spark: SparkSession, cfg: Config, oday: String): DataFrame =
+  def readKeys(spark: SparkSession, cfg: Config, odays: String*): DataFrame =
     spark.read.jdbc(cfg.url, cfg.table, props(cfg))
-      .where(org.apache.spark.sql.functions.col("oday") === oday)
+      .where(DaySink.onDays(odays))
       .select("uuid")
 
   /** K1/K2: batched INSERT append on at most `numPartitions` connections.

@@ -127,6 +127,26 @@ class HfpLoadJobSpec extends SparkSuite {
     assert(HfpLoadJob.loadDay(sc, root, sink, date) == Map("stopevent" -> 0L))
   }
 
+  test("rows whose oday casts to NULL are appended once, not on every re-run") {
+    import graft.sources.{DaySink, JdbcDaySink, ParquetDaySink}
+    // castDate("") and castDate("garbage") are NULL: such rows are stored
+    // under no day, so a key read of `oday = date` alone never sees them
+    val root = Files.createTempDirectory("hfpnulloday").toString
+    val d = Paths.get(root, "csv", "StopEvent")
+    Files.createDirectories(d)
+    Files.writeString(d.resolve(s"$date-0.csv"), Seq(
+      row(Map("uuid" -> "e1", "oday" -> "")),
+      row(Map("uuid" -> "g1", "oday" -> "garbage"))).mkString("\n") + "\n")
+    val sinks: Seq[DaySink] = Seq(
+      ParquetDaySink(Files.createTempDirectory("hfpnullodaysink").toString),
+      JdbcDaySink("jdbc:derby:memory:graftnulloday;create=true",
+        batchSize = 10, numPartitions = 1, bootstrapDdl = true))
+    sinks.foreach { sink =>
+      assert(HfpLoadJob.loadDay(sc, root, sink, date) == Map("stopevent" -> 2L), sink)
+      assert(HfpLoadJob.loadDay(sc, root, sink, date) == Map("stopevent" -> 0L), sink)
+    }
+  }
+
   test("loadDay works through explicit file:// URIs (Hadoop FS probes, not java.io.File)") {
     // on a cluster every path is a URI (hdfs://, abfss://); java.io.File
     // probes would return false for all of them and the load would

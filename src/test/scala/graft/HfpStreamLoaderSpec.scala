@@ -80,8 +80,7 @@ class HfpStreamLoaderSpec extends SparkSuite {
 
     // the key scan a day-2-only batch performs: partition-pruned to
     // oday=2021-02-10 — day 1's partition is never listed in the scan
-    val keys = HfpStreamLoader.existingKeys(spark, sink, "stopevent",
-      Seq(java.sql.Date.valueOf(day2)))
+    val keys = graft.sources.ParquetDaySink(sink).existingKeys(spark, "stopevent", day2)
     assert(keys.collect().map(_.getString(0)).toSeq == Seq("a2"))
     val scan = keys.queryExecution.executedPlan.collectLeaves().collectFirst {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
@@ -173,5 +172,84 @@ class HfpStreamLoaderSpec extends SparkSuite {
     q2.awaitTermination()
     assert(spark.read.parquet(s"$sink/vehicleposition").count() == 1L)
     assert(spark.read.parquet(s"$sink/unsignedevent").count() == 1L)
+  }
+
+  test("a group outside HfpLoadJob.groups fails fast, naming the group") {
+    // LightPriorityEvent is the opt-in 57-column batch route: streamed
+    // with the 44-column schema it would silently lose its tlp_* fields
+    val root = Files.createTempDirectory("hfpstreamgroup").toString
+    val sink = Files.createTempDirectory("hfpstreamgroupsink").toString
+    Seq("LightPriorityEvent", "Bogus").foreach { group =>
+      val e = intercept[IllegalArgumentException] {
+        HfpStreamLoader.start(sc, root, sink, group,
+          Files.createTempDirectory("ckgroup").toString)
+      }
+      assert(e.getMessage.contains(s"'$group'"), e.getMessage)
+    }
+  }
+
+  test("streams into a JDBC sink (Derby): routes to their tables, restart appends nothing") {
+    import graft.sources.JdbcDaySink
+    val url = "jdbc:derby:memory:graftstream;create=true"
+    val root = Files.createTempDirectory("hfpstreamjdbc").toString
+    val dir = Paths.get(root, "csv", "VehiclePosition")
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("a.csv"), Seq(
+      row(Map("uuid" -> "j1", "oday" -> "2021-02-09", "journey_type" -> "journey")),
+      row(Map("uuid" -> "j2", "oday" -> "2021-02-10", "journey_type" -> "journey")),
+      row(Map("uuid" -> "d1", "oday" -> "2021-02-09", "journey_type" -> "deadrun")))
+      .mkString("\n") + "\n")
+    val sink = JdbcDaySink(url, batchSize = 10, numPartitions = 2, bootstrapDdl = true)
+    def uuids(table: String): Seq[String] =
+      spark.read.jdbc(url, table, new java.util.Properties())
+        .select("uuid").collect().map(_.getString(0)).toSeq.sorted
+    HfpStreamLoader.start(sc, root, sink, "VehiclePosition",
+      Files.createTempDirectory("ckjdbc1").toString).awaitTermination()
+    assert(uuids("vehicleposition") == Seq("j1", "j2"))
+    assert(uuids("unsignedevent") == Seq("d1"))
+    // fresh checkpoint: the whole directory is re-read and deduped
+    HfpStreamLoader.start(sc, root, sink, "VehiclePosition",
+      Files.createTempDirectory("ckjdbc2").toString).awaitTermination()
+    assert(uuids("vehicleposition") == Seq("j1", "j2"))
+    assert(uuids("unsignedevent") == Seq("d1"))
+  }
+
+  test("a VP micro-batch runs the batch core: no isEmpty probe, one key snapshot") {
+    // the stream runs HfpLoadJob.loadGroup: each route is one write
+    // (a zero-row append is a no-op, so no emptiness probe per route)
+    // and both routes share one pinned snapshot
+    val root = Files.createTempDirectory("hfpstreamshape").toString
+    val sink = Files.createTempDirectory("hfpstreamshapesink").toString
+    val dir = Paths.get(root, "csv", "VehiclePosition")
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("a.csv"), Seq(
+      row(Map("uuid" -> "v1", "oday" -> "2021-02-09", "journey_type" -> "journey")),
+      row(Map("uuid" -> "v2", "oday" -> "2021-02-09", "journey_type" -> "deadrun")))
+      .mkString("\n") + "\n")
+    val plans = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.synchronized { plans += ((funcName, qe.executedPlan.toString)) }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    // registered before start: the query's session is cloned from this one
+    sc.listenerManager.register(listener)
+    try {
+      HfpStreamLoader.start(sc, root, sink, "VehiclePosition",
+        Files.createTempDirectory("ckshape").toString).awaitTermination()
+      // delivery is async and in order: once both route writes have
+      // arrived, every earlier action of the batch has too
+      val deadline = System.nanoTime() + 10e9.toLong
+      def writes = plans.synchronized {
+        plans.count(_._2.contains("InsertIntoHadoopFsRelation"))
+      }
+      while (writes < 2 && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(writes == 2, s"expected 2 route writes, got $writes")
+      val actions = plans.synchronized(plans.map(_._1).toList)
+      assert(!actions.contains("isEmpty"), actions.mkString(", "))
+      assert(actions.count(_ == "localCheckpoint") == 1, actions.mkString(", "))
+    } finally sc.listenerManager.unregister(listener)
   }
 }
