@@ -7,8 +7,8 @@ import graft.sources.{DaySink, FsUtil, HfpCsvSource, ParquetDaySink}
 
 /** The reference's whole day-load orchestration (hfpTask.ts:13-151) as
   * one idempotent batch job: per event group — scan the group+date CSV
-  * prefix, cast, key-filter, route, anti-join against the sink's
-  * existing keys for that operating day, append.
+  * prefix, cast, key-filter, anti-join once against the sink's existing
+  * keys for that operating day, route, append.
   *
   * Faithful behaviors (SURVEY.md §3):
   *  - groups processed in the fixed order StopEvent, OtherEvent,
@@ -24,8 +24,10 @@ import graft.sources.{DaySink, FsUtil, HfpCsvSource, ParquetDaySink}
   *    re-run dedup; no transactions, same as the reference
   *
   * Scale: each group is scan → narrow ops → one broadcast/shuffled
-  * anti-join → partitioned append; the sink layout (`oday=` partitions)
-  * makes the next run's key scan partition-pruned.
+  * anti-join → route split → partitioned append; the VP group's two
+  * routes share that one join (its output is cached for both), and the
+  * sink layout (`oday=` partitions) makes the next run's key scan
+  * partition-pruned.
   */
 object HfpLoadJob {
 
@@ -228,37 +230,27 @@ object HfpLoadJob {
   }
 
   /** The load core both loaders run for one event group: C4 key filter,
-    * C5 routing, the dedup anti-join against a key snapshot frozen
-    * before any write, and the append. `days` scopes the snapshot
+    * the dedup anti-join against a key snapshot frozen before any write,
+    * C5 routing, and the append. `days` scopes the snapshot
     * ([[DaySink.existingKeys]]); `what` names the group and its unit of
     * work (day or micro-batch) in failures. Returns rows appended per
     * table.
     *
-    * Within the group the two VP routes overlap: both anti-join the SAME
-    * pinned key snapshot (frozen before either write starts, exactly the
-    * read isolation the reference's sequential writes rely on), and they
-    * append to different tables. Concurrent inserts are reference
-    * behavior, not a liberty — the reference itself writes with
-    * INSERT_CONCURRENCY=100 (constants.ts:35-52).
+    * The group runs ONE anti-join: the VP build side is the union of
+    * both route tables' keys, the same for both routes, and the route
+    * filter reads only left-side columns, so it commutes with the
+    * anti-join. The routes split after the join and overlap: both
+    * read the same pinned snapshot (frozen before either write starts,
+    * exactly the read isolation the reference's sequential writes rely
+    * on), and they append to different tables. Concurrent inserts are
+    * reference behavior, not a liberty — the reference itself writes
+    * with INSERT_CONCURRENCY=100 (constants.ts:35-52).
     */
-  private[graft] def loadGroup(typed0: DataFrame, group: String, table: String,
+  private[graft] def loadGroup(typed: DataFrame, group: String, table: String,
       sink: DaySink, days: Seq[String], what: String): Map[String, Long] = {
-    val spark = typed0.sparkSession
+    val spark = typed.sparkSession
     val isVp = group == "VehiclePosition"
-    val keyed = typed0.where(col("uuid").isNotNull && col("uuid") =!= "") // C4
-    // the VP group feeds TWO routes — persist so the CSV scan+cast runs
-    // once for both, not once per route; a caller's already-cached input
-    // (the stream's micro-batch) serves both routes as it is
-    val pin = isVp && typed0.storageLevel == StorageLevel.NONE
-    val typed = if (pin) keyed.persist() else keyed
-    // C5 routing: only the VP group splits
-    val routes: Seq[(String, DataFrame)] =
-      if (isVp)
-        Seq(
-          "vehicleposition" -> typed.where(col("journey_type") === "journey"),
-          "unsignedevent" -> typed.where(
-            col("journey_type").isNull || col("journey_type") =!= "journey"))
-      else Seq(table -> typed)
+    val tables = if (isVp) Seq("vehicleposition", "unsignedevent") else Seq(table)
     // A1 build side, read BEFORE writes start; VP unions both tables.
     // PINNED (eager localCheckpoint) so the key set is frozen at group
     // start, matching the reference's snapshot-then-write order
@@ -267,25 +259,38 @@ object HfpLoadJob {
     // dropping a uuid that appears in BOTH VP routes within one run (the
     // reference inserts both rows) — see [[pinnedBuildSide]] for why a
     // persist+count pin is not enough against the parquet sink.
-    val rawBuild = routes.map { case (t, _) => sink.existingKeys(spark, t, days: _*) }
-      .reduce(_ union _)
+    val rawBuild = tables.map(t => sink.existingKeys(spark, t, days: _*)).reduce(_ union _)
+    val (buildSide, unpin) = pinnedBuildSide(rawBuild, s"the key snapshot ($what)")
     try {
-      val (buildSide, unpin) = pinnedBuildSide(rawBuild, s"the key snapshot ($what)")
+      val keyed = typed.where(col("uuid").isNotNull && col("uuid") =!= "") // C4
+      val fresh = keyed.join(buildSide, Seq("uuid"), "left_anti")
+      // the VP group feeds TWO routes — persist the anti-join's output so
+      // the scan, cast and join run once for both (on a re-run that is
+      // the few surviving rows, not the group); a caller's already-cached
+      // input (the stream's micro-batch) is not copied a second time
+      val pin = isVp && typed.storageLevel == StorageLevel.NONE
+      val routed = if (pin) fresh.persist() else fresh
+      // C5 routing: only the VP group splits
+      val routes: Seq[(String, DataFrame)] =
+        if (isVp)
+          Seq(
+            "vehicleposition" -> routed.where(col("journey_type") === "journey"),
+            "unsignedevent" -> routed.where(
+              col("journey_type").isNull || col("journey_type") =!= "journey"))
+        else Seq(table -> routed)
       try runOverlapped(routes) { case (targetTable, df) =>
         // ONE action per route: the appended-row count rides the write
-        // itself as an observed metric, so the scan+cast+anti-join
-        // streams straight into the sink. Counting first would run two
-        // jobs per route, and caching the fresh rows for it would be a
-        // full extra copy of the day. A zero-row route issues a zero-row
-        // append (a no-op INSERT on JDBC; a _SUCCESS-only dir on parquet,
-        // which the `oday=*` existence probes already handle — NOTES #56b).
-        val fresh = df.join(buildSide, Seq("uuid"), "left_anti")
+        // itself as an observed metric, so the rows stream straight into
+        // the sink. Counting first would run two jobs per route. A
+        // zero-row route issues a zero-row append (a no-op INSERT on
+        // JDBC; a _SUCCESS-only dir on parquet, which the `oday=*`
+        // existence probes already handle — NOTES #56b).
         val obs = Observation()
-        sink.append(fresh.observe(obs, count(lit(1)).as("n")), targetTable)
+        sink.append(df.observe(obs, count(lit(1)).as("n")), targetTable)
         targetTable -> observedCount(obs, s"route '$targetTable' ($what)")
       }.toMap
-      finally unpin()
-    } finally if (pin) typed.unpersist(blocking = false)
+      finally if (pin) routed.unpersist(blocking = false)
+    } finally unpin()
   }
 
   /** The row count an action observed as `n`. The wait is bounded: an

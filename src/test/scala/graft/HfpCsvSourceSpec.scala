@@ -55,6 +55,41 @@ class HfpCsvSourceSpec extends SparkSuite {
     assert(u2.isNullAt(u2.fieldIndex("dl")))
   }
 
+  test("the 44-column cast compiles into whole-stage codegen, with no interpreted fallback") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import graft.functions.JsPrefixCast
+    // a generated call Janino cannot compile would otherwise drop the
+    // whole projection to interpreted evaluation without failing
+    val confs = Map(
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k))
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val typed = HfpCsvSource.castAll(HfpCsvSource.read(sc, writeFixture()))
+      val plan = typed.queryExecution.executedPlan
+      val stage = plan.collectFirst {
+        case w: WholeStageCodegenExec if w.child.exists {
+          case p: ProjectExec => p.projectList.size == HfpCsvSource.columns.size &&
+            p.projectList.exists(_.exists(_.isInstanceOf[JsPrefixCast]))
+          case _ => false
+        } => w
+      }.getOrElse(fail(s"cast Project outside whole-stage codegen:\n$plan"))
+      // compile the stage's class now: a Janino error throws here, and a
+      // method over the huge-method limit would make Spark run the stage
+      // interpreted instead
+      val (_, code) = stage.doCodeGen()
+      val (_, stats) = CodeGenerator.compile(code)
+      assert(stats.maxMethodCodeSize <= spark.sessionState.conf.hugeMethodLimit,
+        stats.toString)
+      assert(typed.collect().length == 4)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("lightpriorityevent schema parity (declared, intentionally unrouted)") {
     // reference postgres_schema.sql:1-61: 44 wire columns + 13 TLP
     // fields; no reference code path reads or writes the table, so the

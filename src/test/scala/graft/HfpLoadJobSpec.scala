@@ -258,6 +258,44 @@ class HfpLoadJobSpec extends SparkSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
   }
 
+  test("VP group runs one anti-join: one key-side and one probe-side exchange") {
+    import graft.sources.JdbcDaySink
+    // Both VP routes anti-join the same key snapshot, and the route
+    // filter commutes with the join, so the group joins once and splits
+    // after. With auto-broadcast off the join shuffles: a join per route
+    // would run four shuffle-map stages, one join runs two.
+    val root = Files.createTempDirectory("hfpvpshape").toString
+    val d = Paths.get(root, "csv", "VehiclePosition")
+    Files.createDirectories(d)
+    Files.writeString(d.resolve(s"$date-0.csv"), Seq(
+      row(Map("uuid" -> "v1", "oday" -> date, "journey_type" -> "journey")),
+      row(Map("uuid" -> "u1", "oday" -> date, "journey_type" -> "deadrun")))
+      .mkString("\n") + "\n")
+    val sink = JdbcDaySink("jdbc:derby:memory:graftvpshape;create=true",
+      batchSize = 10, numPartitions = 1, bootstrapDdl = true)
+    val before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      assert(HfpLoadJob.loadDay(sc, root, sink, date) ==
+        Map("vehicleposition" -> 1L, "unsignedevent" -> 1L))
+      // a late file re-run: both sides of the join hold rows
+      Files.writeString(d.resolve(s"$date-1.csv"), Seq(
+        row(Map("uuid" -> "v1", "oday" -> date, "journey_type" -> "journey")),
+        row(Map("uuid" -> "v2", "oday" -> date, "journey_type" -> "journey")),
+        row(Map("uuid" -> "u2", "oday" -> date, "journey_type" -> "deadrun")))
+        .mkString("\n") + "\n")
+      val (counts, stages, _) = launched(HfpLoadJob.loadDay(sc, root, sink, date))
+      assert(counts == Map("vehicleposition" -> 1L, "unsignedevent" -> 1L), counts.toString)
+      // the stages that ran and wrote shuffle output: exchange map sides
+      // (a skipped stage carries no metrics)
+      def written(s: org.apache.spark.scheduler.StageInfo) =
+        Option(s.taskMetrics).map(_.shuffleWriteMetrics.recordsWritten).getOrElse(0L)
+      val exchanges = stages.filter(written(_) > 0)
+      assert(exchanges.size == 2,
+        stages.map(s => s"${s.stageId}:${s.name}:${written(s)}").mkString("; "))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
+  }
+
   test("bootstrapDdl: loadDay against a ZERO-table database creates its tables from the generator") {
     import graft.sources.JdbcDaySink
     // the reference pre-applies its migration; the opt-in bootstrap is

@@ -23,9 +23,12 @@ trait SparkSuite extends AnyFunSuite {
 
   /** Runs `body` under a job group of its own and returns what it made
     * Spark launch: the stages of its jobs and the type of every task
-    * that ran (`ShuffleMapTask` or `ResultTask`). Listener delivery is
-    * asynchronous, so a marker job in another group runs after `body`;
-    * once its start is delivered, every event `body` caused has been too.
+    * that ran (`ShuffleMapTask` or `ResultTask`). A stage that ran is
+    * reported as its submitted attempt, which carries the stage's task
+    * metrics; a stage a job skipped (its shuffle output already there)
+    * has null `taskMetrics`. Listener delivery is asynchronous, so a
+    * marker job in another group runs after `body`; once its start is
+    * delivered, every event `body` caused has been too.
     */
   def launched[A](body: => A): (A, Seq[org.apache.spark.scheduler.StageInfo], Seq[String]) = {
     import org.apache.spark.scheduler._
@@ -42,6 +45,8 @@ trait SparkSuite extends AnyFunSuite {
           case Some(`marker`) => flushed.countDown()
           case _ => ()
         }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (stages.containsKey(e.stageInfo.stageId)) stages.put(e.stageInfo.stageId, e.stageInfo)
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (stages.containsKey(e.stageId)) tasks.add(e.taskType)
     }
