@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** First three /proc/loadavg fields (1/5/15-min run-queue averages),
@@ -82,30 +81,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadavg()
     val wallStart = System.nanoTime()
-    // the driver contract pins the bench env at local[32] with 32
-    // shuffle partitions; SPARK_GRAFT_CPUS is a dev-only override (the
-    // old default of 4 meant the DRIVER's official runs measured a
-    // 4-thread engine against a 32-thread floor)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // see GraftSession: cached shared relations must coalesce like
-      // any other shuffle output or tiny-partition scheduling dominates
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // the whole-stage codegen class cache defaults to 100 entries;
-      // with the decorrelated sweeps a query's two executions are 351
-      // queries apart, so at the default every pass-B run re-pays
-      // Janino compilation (~0.1 s/query × 352 ≈ a uniform +25% that
-      // is measurement artifact, not plan cost). Sized to hold the
-      // whole registry so pass B measures the same warm-codegen
-      // steady state the historical floors were recorded under.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // match Verify: TZ
-      // changes event-instant filter selectivity (ADVICE r5)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // plain posture: the reference host runs local[32] with 32 shuffle
+    // partitions; SPARK_GRAFT_CPUS is a dev-only override
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JIT/codegen paths + parquet footers + the
     // session-shared relations (dedup pair graph, co-purchase pairs,

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * registry in [[SparkEntry]] exercises the same functions.
   *
   * {{{
-  * val spark = GraftSession.build()          // AQE + skew + extensions
+  * val spark = GraftSession.build(engine = true)  // kernels + aliases
   * val docs  = Graft.table(spark, dir, "documents")
   * val clean = Graft.text.qualityScores(spark, dir)
   * val dups  = Graft.dedup.minhashPairs(spark, dir)

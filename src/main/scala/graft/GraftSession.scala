@@ -2,38 +2,64 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Production session factory: one place that encodes the engine's
-  * scale posture so every deployment (driver harness, notebook, spark-
-  * submit) gets the same physical behavior.
+/** The one session factory: every main (Bench, Verify, HfpLoadJob, Dev)
+  * and the test suites build their `SparkSession` here, so the session
+  * a run measures is the session the CLI ships.
   *
-  *  - AQE on, with partition coalescing and skew-join splitting — the
-  *    runtime re-planner that handles what static tuning can't (skewed
-  *    keys, misestimated build sides) at 100 TB.
-  *  - `shufflePartitions` sized by the caller: rule of thumb 2-3× total
-  *    executor cores on a cluster (the local default here is 32 for
-  *    local[32]).
-  *  - 128 MiB scan splits (`maxPartitionBytes`) — large enough to
-  *    amortize task startup against 100 TB of parquet, small enough to
-  *    keep a partition's working set in executor memory.
+  * Cores ([[cores]]): `SPARK_GRAFT_CPUS` when set, else the host's
+  * cores capped at 32 (Bench's reference host runs local[32]). A value
+  * that is not a positive integer fails naming the variable. The count
+  * sets both the local thread count and the shuffle partitions.
+  *
+  * Plain posture (the default):
+  *  - `local[cores]` (a caller may pass a deployment master instead)
+  *    with `cores` shuffle partitions
+  *  - cached-plan output coalescing (see the conf below)
+  *  - a whole-registry codegen class cache (see the conf below)
   *  - UTC session timezone (the engine's determinism contract assumes
-  *    it), nanos-as-long for the driver's TIMESTAMP(NANOS) parquet.
-  *  - [[graft.functions.GraftExtensions]] injected: the custom kernels
-  *    (graft_dot/graft_norm_sq/graft_kmv_distinct) and the self-dot
-  *    optimizer rule are available to SQL without runtime registration.
+  *    it), nanos-as-long for the TIMESTAMP(NANOS) events parquet, UI
+  *    off
+  *  - AQE with partition coalescing and skew-join splitting, and
+  *    128 MiB scan splits, are Spark 4's defaults and are not restated
+  *
+  * Engine posture (`engine = true`): the plain posture plus
+  * [[graft.functions.GraftExtensions]] (the graft_* kernels, the
+  * self-dot optimizer rule and the custom operators' strategies at
+  * session build, no runtime registration) and the
+  * [[graft.functions.SqlCompat]] name aliases. This is the `Graft`
+  * facade's session.
+  *
+  * Bench and Verify stay plain: each registry query registers its
+  * kernels at runtime (`GraftExpressions.register`, via `Tables`), and
+  * the extensions' `RewriteSelfDot` float rewrite could move
+  * oracle-exact results.
   */
 object GraftSession {
 
-  def build(
-      appName: String = "graft",
-      master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession.builder()
-      .appName(appName)
-      .master(master)
-      .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+  /** Local cores for a session, from `env` and the host's `available`
+    * cores (see the object doc).
+    */
+  def cores(env: Map[String, String] = sys.env,
+      available: Int = Runtime.getRuntime.availableProcessors): Int =
+    env.get("SPARK_GRAFT_CPUS") match {
+      case None => math.min(available, 32)
+      case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
+  /** The session in the plain posture, or the engine posture when
+    * `engine`. `master` replaces `local[cores]` for a deployment. If
+    * the JVM already has a session it is returned with the runtime confs
+    * applied; static ones (the codegen cache size, the extensions) keep
+    * the values it was built with.
+    */
+  def build(cores: Int = GraftSession.cores(), engine: Boolean = false,
+      master: Option[String] = None): SparkSession = {
+    val plain = SparkSession.builder()
+      .appName("graft")
+      .master(master.getOrElse(s"local[$cores]"))
+      .config("spark.sql.shuffle.partitions", cores.toString)
       // cached plans keep their shuffle-declared partitioning unless
       // this is on, so every .cache()'d shared relation (co-purchase
       // pairs, shingle hashes, trigram counts) pins
@@ -44,22 +70,32 @@ object GraftSession {
       // (ta_dsir 1.1→0.4 s, ta_textrank 2.2→0.9 s at sf0.1), and on a
       // real cluster size-aware partitioning is equally what you want.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
+      // the whole-stage codegen class cache defaults to 100 entries;
+      // with Bench's decorrelated sweeps a query's two executions are
+      // 351 queries apart, so at the default every pass-B run re-pays
+      // Janino compilation (~0.1 s/query × 352 ≈ a uniform +25% that
+      // is measurement artifact, not plan cost). Sized to hold the
+      // whole registry.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // DuckDB-dialect alias pack (string_split/unnest/list_*/range…):
-    // NAME aliases only — temp-function scope, every alias a native
-    // codegen'd expression, and a temp function can never shadow a
-    // builtin, so user SQL that never says these names is untouched.
-    // The dialect's PARSER settings (raw string literals, double-quoted
-    // identifiers, …) change how existing user SQL parses and are NOT
-    // applied implicitly (ADVICE r12): opt in per session with
-    // SqlCompat.register(spark, dialectSession = true) or per block
-    // with SqlCompat.withDialectSession (what the parity paths do).
-    graft.functions.SqlCompat.register(spark)
-    spark
+    if (!engine) plain.getOrCreate()
+    else {
+      val spark = plain
+        .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
+        .getOrCreate()
+      // DuckDB-dialect alias pack (string_split/unnest/list_*/range…):
+      // NAME aliases only — temp-function scope, every alias a native
+      // codegen'd expression, and a temp function can never shadow a
+      // builtin, so user SQL that never says these names is untouched.
+      // The dialect's PARSER settings (raw string literals, double-quoted
+      // identifiers, …) change how existing user SQL parses and are NOT
+      // applied implicitly (ADVICE r12): opt in per session with
+      // SqlCompat.register(spark, dialectSession = true) or per block
+      // with SqlCompat.withDialectSession (what the parity paths do).
+      graft.functions.SqlCompat.register(spark)
+      spark
+    }
   }
 }

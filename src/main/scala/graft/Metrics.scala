@@ -1,55 +1,16 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Driver-side observability — the reference's monitoring utilities
-  * (M3 duration logging logTime.ts, M4/M5 rate-limited + periodic
-  * status hfpTask.ts:27-31, M1 tumbling mean averageTime.ts) mapped to
-  * the Spark-native equivalents: a QueryExecutionListener for per-query
-  * durations and a pure tumbling-mean over the last-N samples. (The M1
-  * mean also exists as a data-plane window op: Analytics.qWindowFrame's
-  * sliding_mean_qty.)
+/** Driver-side observability for `Dataset.observe` metrics. Of the
+  * reference's monitoring utilities (M3 duration logging logTime.ts,
+  * M4/M5 rate-limited and periodic status hfpTask.ts:27-31, M1 tumbling
+  * mean averageTime.ts) only the M1 mean has a counterpart, as a window
+  * op (Analytics.qWindowFrame's sliding_mean_qty).
   */
 object Metrics {
-
-  /** M1: mean of each consecutive chunk of `chunk` samples (the
-    * reference resets its window every 50 samples — a tumbling, not
-    * sliding, mean).
-    */
-  def tumblingMeans(samples: Seq[Double], chunk: Int = 50): Seq[Double] =
-    samples.grouped(chunk).map(g => g.sum / g.size).toSeq
-
-  final class RecordingListener extends QueryExecutionListener {
-    val succeeded = new AtomicLong(0)
-    val failed = new AtomicLong(0)
-    val durationsNs = new ConcurrentLinkedQueue[java.lang.Long]()
-
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-      succeeded.incrementAndGet(); durationsNs.add(durationNs)
-    }
-    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = {
-      failed.incrementAndGet()
-    }
-
-    def meanSeconds: Double = {
-      val ds = durationsNs.toArray(Array.empty[java.lang.Long]).map(_.toDouble / 1e9)
-      if (ds.isEmpty) 0.0 else ds.sum / ds.length
-    }
-  }
-
-  /** Attach a listener to a live session (detach with `remove`). */
-  def attach(spark: SparkSession): RecordingListener = {
-    val l = new RecordingListener
-    spark.listenerManager.register(l)
-    l
-  }
-
-  def remove(spark: SparkSession, l: RecordingListener): Unit =
-    spark.listenerManager.unregister(l)
 
   /** Collects the `Dataset.observe(...)` metrics of every successful
     * execution (latest row per metric name) and WARNS whenever an

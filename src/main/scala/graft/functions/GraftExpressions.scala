@@ -935,9 +935,9 @@ object GraftExpressions {
   }
 }
 
-/** Proper deployment path: `SparkSession.builder().withExtensions(new
-  * GraftExtensions)` (or `spark.sql.extensions=graft.functions
-  * .GraftExtensions`) gives the COMPLETE engine at session build time
+/** Proper deployment path: `GraftSession.build(engine = true)` (or
+  * `spark.sql.extensions=graft.functions.GraftExtensions` on any other
+  * session) gives the COMPLETE engine at session build time
   * with zero runtime registration: every graft_* kernel (the float
   * fast-path variants included), the self-dot optimizer rule, and the
   * custom physical operators' planner strategies (GroupedTopK,

@@ -114,12 +114,8 @@ object HfpLoadJob {
             System.err.println(e.getMessage)
             sys.exit(2)
           }
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .getOrCreate()
+        // SPARK_MASTER is the deployment override of local[cores]
+        val spark = graft.GraftSession.build(master = sys.env.get("SPARK_MASTER"))
         try loadDay(spark, args(0), sink, date).toSeq.sorted
           .foreach { case (t, n) => println(s"$t: $n") }
         finally spark.stop()
@@ -199,20 +195,22 @@ object HfpLoadJob {
       date: String, includeLightPriority: Boolean = false): Map[String, Long] = {
     val dayGroups =
       if (includeLightPriority) groups :+ lightPriorityGroup else groups
-    // S1 blob-list analog, probed up front in the fixed group order:
-    // does each group have any files for the date prefix? (globStatus,
+    // S1 blob-list analog, listed up front in the fixed group order:
+    // which files does each group have for the date prefix? (globStatus,
     // not a local-FS directory probe — driver metadata only). The fixed
     // prefix is escaped so a csvRoot containing glob metacharacters
     // ([, {, *) stays literal — only the trailing `*` is pattern
-    // syntax. The same escaped pattern feeds the CSV reader, which
-    // resolves paths with the same glob grammar. Probing first means
-    // only the chains with real work enter the overlapped region — a
-    // day with a single populated group takes exactly the sequential
-    // path (runOverlapped short-circuits on one item).
+    // syntax. The reader gets the listed files, each escaped again:
+    // handed the pattern it would glob a second time and log a
+    // FileStreamSink WARN with a stack trace per read (its
+    // metadata-directory probe stats the pattern as a path). Listing
+    // first means only the chains with real work enter the overlapped
+    // region — a day with a single populated group takes exactly the
+    // sequential path (runOverlapped short-circuits on one item).
     val present = dayGroups.map { case (group, table) =>
-      (group, table, FsUtil.escapeGlob(s"$csvRoot/csv/$group/$date") + "*")
-    }.filter { case (_, _, pattern) => FsUtil.globNonEmpty(spark, pattern) }
-    runOverlapped(present) { case (group, table, pattern) =>
+      (group, table, FsUtil.glob(spark, FsUtil.escapeGlob(s"$csvRoot/csv/$group/$date") + "*"))
+    }.filter { case (_, _, files) => files.nonEmpty }
+    runOverlapped(present) { case (group, table, files) =>
       // Hash-spreading the wire rows on uuid before the cast layer was
       // A/B'd (the single-split day CSV makes every route stage one
       // task, event-log profiled) and measured 2× SLOWER end-to-end
@@ -221,10 +219,11 @@ object HfpLoadJob {
       // file size. At 100 TB the day files exceed maxPartitionBytes and
       // split naturally, so the serial-scan shape is a test-scale
       // artifact the data itself fixes. Kept serial deliberately.
+      val paths = files.map(FsUtil.escapeGlob)
       val typed =
         if (group == lightPriorityGroup._1)
-          HfpCsvSource.castAllLightPriority(HfpCsvSource.readLightPriority(spark, pattern))
-        else HfpCsvSource.castAll(HfpCsvSource.read(spark, pattern))
+          HfpCsvSource.castAllLightPriority(HfpCsvSource.readLightPriority(spark, paths: _*))
+        else HfpCsvSource.castAll(HfpCsvSource.read(spark, paths: _*))
       loadGroup(typed, group, table, sink, Seq(date), s"$group/$date")
     }.flatten.toMap
   }

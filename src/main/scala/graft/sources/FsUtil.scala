@@ -30,22 +30,26 @@ object FsUtil {
     fsFor(spark, p).exists(p)
   }
 
-  /** True iff the glob pattern matches at least one path (S1 blob-list
-    * analog: "does this group have any blobs for this date prefix?").
-    * `globStatus` returns null when the parent does not exist.
+  /** The paths the glob pattern matches, empty when none does (S1
+    * blob-list analog: "which blobs does this group have for this date
+    * prefix?"). `globStatus` returns null when the parent does not exist.
     *
     * The pattern is glob SYNTAX: callers building a pattern from a
     * user-supplied base path must [[escapeGlob]] that fixed prefix
     * before appending their intentional `*` — a csvRoot containing
     * `[`/`{` would otherwise be parsed as pattern syntax (throwing, or
     * silently matching the wrong directories) where the old
-    * `java.io.File` probe treated it literally.
+    * `java.io.File` probe treated it literally. The returned paths are
+    * literal: escape each one before handing it to a reader.
     */
-  def globNonEmpty(spark: SparkSession, pattern: String): Boolean = {
+  def glob(spark: SparkSession, pattern: String): Seq[String] = {
     val p = new Path(pattern)
-    val matches = fsFor(spark, p).globStatus(p)
-    matches != null && matches.nonEmpty
+    Option(fsFor(spark, p).globStatus(p)).toSeq.flatten.map(_.getPath.toString)
   }
+
+  /** True iff the glob pattern matches at least one path ([[glob]]). */
+  def globNonEmpty(spark: SparkSession, pattern: String): Boolean =
+    glob(spark, pattern).nonEmpty
 
   /** Backslash-escape Hadoop glob metacharacters (`\ [ ] { } * ?`) so a
     * literal path segment matches itself inside a glob pattern. Spark's

@@ -92,13 +92,16 @@ object HfpCsvSource {
     StructType(lightPriorityEventColumns.map(
       StructField(_, StringType, nullable = true)))
 
-  /** Read one group+date's CSV files into the wire-layer DataFrame. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    read(spark, path, columns, rawSchema)
+  /** Read one group+date's CSV files into the wire-layer DataFrame.
+    * Each path is reader path syntax: a glob, or a file escaped with
+    * [[FsUtil.escapeGlob]].
+    */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    read(spark, paths, columns, rawSchema)
 
   /** TLP-route variant: 57-column wire layer. */
-  def readLightPriority(spark: SparkSession, path: String): DataFrame =
-    read(spark, path, lightPriorityEventColumns, lightPriorityRawSchema)
+  def readLightPriority(spark: SparkSession, paths: String*): DataFrame =
+    read(spark, paths, lightPriorityEventColumns, lightPriorityRawSchema)
 
   /** Streaming twin of [[read]]: every CSV file that arrives in `dir`,
     * with the same options and the same all-empty-row filter.
@@ -114,9 +117,9 @@ object HfpCsvSource {
     "ignoreTrailingWhiteSpace" -> "true",
     "mode" -> "PERMISSIVE")
 
-  private def read(spark: SparkSession, path: String, cols: Seq[String],
+  private def read(spark: SparkSession, paths: Seq[String], cols: Seq[String],
       schema: StructType): DataFrame =
-    nonEmptyRows(spark.read.schema(schema).options(options).csv(path), cols)
+    nonEmptyRows(spark.read.schema(schema).options(options).csv(paths: _*), cols)
 
   /** skip_lines_with_empty_values: drop rows where every field is
     * NULL/empty (all-empty record). Spark already drops fully-empty

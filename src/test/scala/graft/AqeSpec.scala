@@ -54,7 +54,7 @@ class AqeSpec extends SparkSuite {
     // check of the factory's settings object instead of a new JVM:
     // here the shared session accepts runtime confs, so verify the
     // factory's session returns the expected runtime values.
-    val s = GraftSession.build(shufflePartitions = 8)
+    val s = GraftSession.build(cores = 8, engine = true)
     try {
       assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
       assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")

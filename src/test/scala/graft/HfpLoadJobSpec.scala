@@ -450,6 +450,41 @@ class HfpLoadJobSpec extends SparkSuite {
     assert(HfpLoadJob.loadDay(sc, root, sink, date) == Map("stopevent" -> 0L))
   }
 
+  test("loadDay reads the listed files: no FileStreamSink WARN") {
+    // handed a glob, the reader's metadata-directory probe stats the
+    // pattern as a path and logs a WARN with a FileNotFoundException
+    // trace per group read
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("fileStreamSinkWarns", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      classOf[org.apache.spark.sql.execution.streaming.sinks.FileStreamSink].getName)
+      .asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    val counts =
+      try HfpLoadJob.loadDay(sc, writeArchive(),
+        Files.createTempDirectory("hfpwarnsink").toString, date)
+      finally {
+        logger.removeAppender(appender)
+        logger.setLevel(level)
+        appender.stop()
+      }
+    assert(counts.values.sum == 6L, counts.toString)
+    assert(warns.isEmpty, warns.asScala.mkString("\n"))
+  }
+
   test("opt-in LightPriorityEvent route loads the 57-column TLP wire format") {
     import graft.sources.{HfpCsvSource, ParquetDaySink}
     val root = writeArchive()

@@ -5,17 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for suites (one per suite via lazy val). */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    // match the shipped sessions (GraftSession/Bench/Verify) so plan
-    // gates test the partitioning behavior that actually runs
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  /** The plain posture the mains run, at 4 cores whatever
+    * SPARK_GRAFT_CPUS says, so plan gates see 4 shuffle partitions.
+    */
+  lazy val spark: SparkSession = GraftSession.build(cores = 4)
 
   val sfDir = "/root/testdata/sf0.001"
 

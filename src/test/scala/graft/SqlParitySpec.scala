@@ -14,7 +14,7 @@ class SqlParitySpec extends SparkSuite {
   /** Every oracle whose SQL text runs UNCHANGED on spark.sql (with the
     * [[graft.functions.SqlCompat]] DuckDB-dialect alias pack
     * registered) with row-identical results — probed exhaustively by
-    * SqlParityProbe, 333 of 352 as of round 14 (259 → 314 → 332 → 333
+    * `graft.Dev parity`, 333 of 352 as of round 14 (259 → 314 → 332 → 333
     * with r14's hfp_load_tlp pinning on first probe, none
     * lost; the KV rewrite and the round's 16 new statements — trace,
     * reward, MoE and distillation waves — all pin

@@ -235,21 +235,6 @@ class StreamingSpec extends SparkSuite {
       "restart with one new file must append exactly that file's rows")
   }
 
-  test("query-execution listener records durations; tumbling mean works") {
-    val l = Metrics.attach(sc)
-    try {
-      graft.sources.Tables(sc, sfDir, "events").count()
-      graft.sources.Tables(sc, sfDir, "orders").count()
-      // listener callbacks are async; poll briefly
-      val deadline = System.currentTimeMillis() + 5000
-      while (l.succeeded.get() < 2 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      assert(l.succeeded.get() >= 2)
-      assert(l.meanSeconds > 0.0)
-    } finally Metrics.remove(spark, l)
-    assert(Metrics.tumblingMeans(Seq(1.0, 3.0, 5.0, 7.0), chunk = 2) == Seq(2.0, 6.0))
-  }
-
   test("streaming cell occupancy agrees with the batch grid aggregation") {
     val events = EventsStream.readEvents(sc, sfDir, "events.parquet")
     val q = EventsStream.runToMemory(spark, EventsStream.cellOccupancy(events), "cells_test")
