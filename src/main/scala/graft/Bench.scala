@@ -33,7 +33,9 @@ object Bench {
     * session. Spares `keep` (warmup-era RDD ids) and everything that is
     * not a materialized checkpoint; plan-keyed `.cache()` relations are
     * untouched (pass B's warm-cache reuse is the documented
-    * steady-state accounting). Returns how many RDDs were freed.
+    * steady-state accounting). Frees through `Bridge.unpersistRDD`:
+    * `RDD.unpersist` would log a lineage WARN per freed checkpoint.
+    * Returns how many RDDs were freed.
     */
   private[graft] def freeDeadCheckpoints(
       sc: org.apache.spark.SparkContext, keep: Set[Int]): Int =
@@ -50,7 +52,7 @@ object Bench {
       var n = 0
       sc.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!keep.contains(id) && !pinned.contains(id) && rdd.isCheckpointed) {
-          rdd.unpersist(blocking = false); n += 1
+          org.apache.spark.sql.graftbridge.Bridge.unpersistRDD(sc, id); n += 1
         }
       }
       n

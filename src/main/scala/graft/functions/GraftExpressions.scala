@@ -921,13 +921,29 @@ object GraftExpressions {
       MisraGries(es.head, k).toAggregateExpression()
     })
 
+  /** Function registries [[register]] has filled. Weak, so a dropped
+    * session's registry is not held; keyed on the registry instance, so
+    * a `newSession()` (which gets its own registry) still registers.
+    */
+  private val registered = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[org.apache.spark.sql.catalyst.analysis.FunctionRegistry,
+      java.lang.Boolean]())
+
   /** Runtime registration on a live session (what the driver-facing
-    * queries use — the driver builds its own plain session).
+    * queries use — the driver builds its own plain session). The
+    * functions are registered once per session registry: every table
+    * read calls this, and re-registering would log Spark's "replaced a
+    * previously registered function" WARN per function per read.
     */
   def register(spark: SparkSession): Unit = {
-    fns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    registered.synchronized {
+      if (!registered.contains(registry)) {
+        fns.foreach { case (name, builder) =>
+          registry.createOrReplaceTempFunction(name, builder, "built-in")
+        }
+        registered.add(registry)
+      }
     }
     // the NOTES #27 spread rule rides the same every-query-path hook,
     // so heavy kernels are parallelism-safe on plain driver sessions too

@@ -23,9 +23,12 @@ import graft.sources.{DaySink, FsUtil, HfpCsvSource, ParquetDaySink}
   *    hfpStorage.ts:15-16) — at-least-once within a run, healed by
   *    re-run dedup; no transactions, same as the reference
   *
-  * Scale: each group is scan → narrow ops → one broadcast/shuffled
-  * anti-join → route split → partitioned append; the VP group's two
-  * routes share that one join (its output is cached for both), and the
+  * Scale: each group is scan → C4 key filter → one broadcast/shuffled
+  * anti-join on the wire `uuid` → 44-column cast → route split →
+  * partitioned append. The cast runs on the join's survivors only, so a
+  * re-run casts the few rows it keeps, not the whole day, and a
+  * shuffled join exchanges wire strings; the VP group's two routes
+  * share that one join (its cast output is cached for both), and the
   * sink layout (`oday=` partitions) makes the next run's key scan
   * partition-pruned.
   */
@@ -220,20 +223,32 @@ object HfpLoadJob {
       // split naturally, so the serial-scan shape is a test-scale
       // artifact the data itself fixes. Kept serial deliberately.
       val paths = files.map(FsUtil.escapeGlob)
-      val typed =
-        if (group == lightPriorityGroup._1)
-          HfpCsvSource.castAllLightPriority(HfpCsvSource.readLightPriority(spark, paths: _*))
-        else HfpCsvSource.castAll(HfpCsvSource.read(spark, paths: _*))
-      loadGroup(typed, group, table, sink, Seq(date), s"$group/$date")
+      val wire =
+        if (group == lightPriorityGroup._1) HfpCsvSource.readLightPriority(spark, paths: _*)
+        else HfpCsvSource.read(spark, paths: _*)
+      loadGroup(wire, group, table, sink, Seq(date), s"$group/$date")
     }.flatten.toMap
   }
 
-  /** The load core both loaders run for one event group: C4 key filter,
-    * the dedup anti-join against a key snapshot frozen before any write,
+  /** The load core both loaders run for one event group's WIRE frame
+    * ([[HfpCsvSource.read]] output): C4 key filter, the dedup anti-join
+    * against a key snapshot frozen before any write, the C3×K2 cast,
     * C5 routing, and the append. `days` scopes the snapshot
     * ([[DaySink.existingKeys]]); `what` names the group and its unit of
     * work (day or micro-batch) in failures. Returns rows appended per
     * table.
+    *
+    * The cast runs AFTER the anti-join, the reverse of the reference's
+    * cast-then-probe (transformHfpItem.ts:54-107, then
+    * insertHfpFromBlobStream.ts:75), because Catalyst never pushes a
+    * `left_anti` below the 44-column cast `Project` (it cannot prove the
+    * cast keeps `uuid`): casting first would cast every row a re-run
+    * then drops. The two orders keep the same rows. The reader trims
+    * every field, and `castString` is the identity on a non-empty
+    * string, so C4 (`uuid` non-NULL, non-empty) means the same on the
+    * wire column as on the cast one, and a surviving wire `uuid` equals
+    * its cast value; the key side holds cast uuids, which are those
+    * same strings. Routing reads the cast `journey_type`, as before.
     *
     * The group runs ONE anti-join: the VP build side is the union of
     * both route tables' keys, the same for both routes, and the route
@@ -245,9 +260,9 @@ object HfpLoadJob {
     * reference behavior, not a liberty — the reference itself writes
     * with INSERT_CONCURRENCY=100 (constants.ts:35-52).
     */
-  private[graft] def loadGroup(typed: DataFrame, group: String, table: String,
+  private[graft] def loadGroup(wire: DataFrame, group: String, table: String,
       sink: DaySink, days: Seq[String], what: String): Map[String, Long] = {
-    val spark = typed.sparkSession
+    val spark = wire.sparkSession
     val isVp = group == "VehiclePosition"
     val tables = if (isVp) Seq("vehicleposition", "unsignedevent") else Seq(table)
     // A1 build side, read BEFORE writes start; VP unions both tables.
@@ -261,13 +276,16 @@ object HfpLoadJob {
     val rawBuild = tables.map(t => sink.existingKeys(spark, t, days: _*)).reduce(_ union _)
     val (buildSide, unpin) = pinnedBuildSide(rawBuild, s"the key snapshot ($what)")
     try {
-      val keyed = typed.where(col("uuid").isNotNull && col("uuid") =!= "") // C4
-      val fresh = keyed.join(buildSide, Seq("uuid"), "left_anti")
-      // the VP group feeds TWO routes — persist the anti-join's output so
-      // the scan, cast and join run once for both (on a re-run that is
+      val keyed = wire.where(col("uuid").isNotNull && col("uuid") =!= "") // C4
+      val survivors = keyed.join(buildSide, Seq("uuid"), "left_anti")
+      val fresh =
+        if (group == lightPriorityGroup._1) HfpCsvSource.castAllLightPriority(survivors)
+        else HfpCsvSource.castAll(survivors)
+      // the VP group feeds TWO routes — persist the cast survivors so
+      // the scan, join and cast run once for both (on a re-run that is
       // the few surviving rows, not the group); a caller's already-cached
       // input (the stream's micro-batch) is not copied a second time
-      val pin = isVp && typed.storageLevel == StorageLevel.NONE
+      val pin = isVp && wire.storageLevel == StorageLevel.NONE
       val routed = if (pin) fresh.persist() else fresh
       // C5 routing: only the VP group splits
       val routes: Seq[(String, DataFrame)] =
@@ -361,9 +379,11 @@ object HfpLoadJob {
     val n = observedCount(obs, what)
     // free the checkpointed blocks once the routes are written — safe
     // because nothing reads the frame afterwards (a checkpointed RDD
-    // cannot be recomputed once its blocks are gone)
+    // cannot be recomputed once its blocks are gone, which is what
+    // `RDD.unpersist` would WARN about)
     val cleanup: () => Unit = () => pinned.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        org.apache.spark.sql.graftbridge.Bridge.unpersistRDD(l.rdd.sparkContext, l.rdd.id)
       case _ => ()
     }
     val limit = broadcastKeyRows(raw.sparkSession)

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.functions.HfpCasts.castDate
 import graft.jobs.HfpLoadJob
 import graft.sources.{DaySink, FsUtil, HfpCsvSource, ParquetDaySink}
 
@@ -41,22 +42,22 @@ object HfpStreamLoader {
         s"the stream loads ${HfpLoadJob.groups.map(_._1).mkString(", ")}"))
     // escaped like the batch path: a csvRoot containing glob
     // metacharacters is literal directory naming to the file source
-    HfpCsvSource.castAll(
-      HfpCsvSource.readStream(spark, FsUtil.escapeGlob(s"$csvRoot/csv/$group")))
+    HfpCsvSource.readStream(spark, FsUtil.escapeGlob(s"$csvRoot/csv/$group"))
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        // pin the batch: the oday probe and the routes would otherwise
-        // each re-run the CSV scan + cast
+        // pin the wire batch: the oday probe and the routes would
+        // otherwise each re-run the CSV scan (the load core casts)
         val batch = batch0.persist()
         try {
           // the batch's operating days scope the sink key scan, like the
           // day job's one day: a micro-batch spans at most a few days
           // (bounded collect), and an unscoped scan would pay a
           // full-history key read + anti-join every micro-batch once the
-          // sink holds months of days
-          val odays = batch.select(col("oday").cast("string")).distinct().collect()
+          // sink holds months of days. The probe casts `oday` as the
+          // load core will, so it names the days the cast rows carry.
+          val odays = batch.select(castDate(col("oday")).cast("string")).distinct().collect()
           if (odays.nonEmpty)
             HfpLoadJob.loadGroup(batch, group, table, sink,
               odays.flatMap(r => Option(r.getString(0))).toSeq,

@@ -24,6 +24,28 @@ class GraftExpressionsSpec extends SparkSuite {
     rows.foreach(r => assert(r.getLong(0) >= 0L && r.getLong(0) < (1L << 60)))
   }
 
+  test("Tables.apply registers the graft functions once per session registry") {
+    // every table read calls register; a second registration logs
+    // Spark's "replaced a previously registered function" WARN for each
+    // of the graft functions
+    import graft.functions.PortableHash
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry.getClass.getName
+    Tables(s, sfDir, "region")
+    val (_, warns) = warnsLogged(registry)(Tables(s, sfDir, "region"))
+    assert(warns.isEmpty, warns.mkString("\n"))
+    val hash = PortableHash.hash64Builtin(lit("a"))
+    def resolves(session: SparkSession) = {
+      val r = session.range(1).select(expr("graft_hash64('a')"), hash).head()
+      assert(r.getLong(0) == r.getLong(1))
+    }
+    resolves(s)
+    // a newSession() gets a registry of its own, and its first read fills it
+    val clone = s.newSession()
+    Tables(clone, sfDir, "region")
+    resolves(clone)
+  }
+
   test("codegen dot product is bit-identical to the HOF fold") {
     GraftExpressions.register(sc)
     val e = Tables(spark, sfDir, "embeddings").limit(50)

@@ -296,6 +296,197 @@ class HfpLoadJobSpec extends SparkSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
   }
 
+  test("VP re-run anti-joins the wire rows: the cast runs above the join") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.types.StringType
+    import graft.functions.JsPrefixCast
+    import graft.sources.JdbcDaySink
+    // Catalyst never pushes the anti-join below the 44-column cast
+    // Project, so the load core orders it by hand: a re-run casts only
+    // the rows the join keeps, and the shuffled probe side carries the
+    // wire strings
+    val root = Files.createTempDirectory("hfpvpwire").toString
+    val d = Paths.get(root, "csv", "VehiclePosition")
+    Files.createDirectories(d)
+    Files.writeString(d.resolve(s"$date-0.csv"), Seq(
+      row(Map("uuid" -> "v1", "oday" -> date, "journey_type" -> "journey", "dl" -> "5")),
+      row(Map("uuid" -> "u1", "oday" -> date, "journey_type" -> "deadrun")))
+      .mkString("\n") + "\n")
+    val sink = JdbcDaySink("jdbc:derby:memory:graftvpwire;create=true",
+      batchSize = 10, numPartitions = 1, bootstrapDdl = true)
+    // every node of an executed plan, through AQE stages and caches
+    def expand(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => expand(a.executedPlan)
+      case q: QueryStageExec => expand(q.plan)
+      case m: InMemoryTableScanExec => expand(m.relation.cachedPlan)
+      case other => other.children.flatMap(expand)
+    })
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, t: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    import scala.jdk.CollectionConverters._
+    // the anti-joins in the captured plans: both route writes read the
+    // one cached join
+    def joins = plans.asScala.toSeq.flatMap(expand).collect {
+      case j: BaseJoinExec if j.joinType == LeftAnti => j
+    }
+    val before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      HfpLoadJob.loadDay(sc, root, sink, date)
+      Files.writeString(d.resolve(s"$date-1.csv"), Seq(
+        row(Map("uuid" -> "v1", "oday" -> date, "journey_type" -> "journey")),
+        row(Map("uuid" -> "v2", "oday" -> date, "journey_type" -> "journey")),
+        row(Map("uuid" -> "u2", "oday" -> date, "journey_type" -> "deadrun")))
+        .mkString("\n") + "\n")
+      sc.listenerManager.register(listener)
+      val counts = HfpLoadJob.loadDay(sc, root, sink, date)
+      assert(counts == Map("vehicleposition" -> 1L, "unsignedevent" -> 1L), counts.toString)
+      // listener delivery is async: wait for both route writes
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (joins.size < 2 && System.nanoTime() < deadline) Thread.sleep(100)
+    } finally {
+      sc.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
+    }
+    assert(joins.size == 2, plans.asScala.mkString("\n"))
+    def casts(p: SparkPlan) = expand(p).exists(_.expressions.exists(_.exists {
+      case _: JsPrefixCast => true
+      case _ => false
+    }))
+    joins.foreach { j =>
+      assert(!casts(j), s"a cast runs below the anti-join:\n$j")
+      val probe = expand(j.left).collectFirst { case e: ShuffleExchangeExec => e }
+        .getOrElse(fail(s"the anti-join's probe side is not shuffled:\n$j"))
+      assert(probe.output.map(_.name) == HfpCsvSource.columns &&
+        probe.output.forall(_.dataType == StringType),
+        s"the probe-side exchange carries ${probe.output.map(a => s"${a.name}:${a.dataType.simpleString}")}")
+    }
+    // and the cast still runs, above the join
+    assert(plans.asScala.exists(casts), plans.asScala.mkString("\n"))
+  }
+
+  test("the appended rows equal the cast-first formulation, quirks included") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import graft.sources.ParquetDaySink
+    // The load core anti-joins the wire rows and casts the survivors;
+    // the reference casts every row and then probes the key set. Both
+    // orders must append the same typed rows: the C4 filter, the key
+    // match and the route read the same values either way.
+    def tlpRow(overrides: Map[String, String]): String =
+      HfpCsvSource.lightPriorityEventColumns
+        .map(c => overrides.getOrElse(c, "x")).mkString(",")
+    val root = Files.createTempDirectory("hfpwirequirks").toString
+    def put(group: String, name: String, lines: Seq[String]): Unit = {
+      val dir = Paths.get(root, "csv", group)
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve(name), lines.mkString("\n") + "\n")
+    }
+    // the first load: its keys are the snapshot the re-run dedups against
+    put("StopEvent", s"$date-0.csv", Seq(
+      row(Map("uuid" -> "s1", "oday" -> date, "dl" -> "5")),
+      row(Map("uuid" -> "s2", "oday" -> "", "dl" -> "0"))))
+    put("VehiclePosition", s"$date-0.csv", Seq(
+      row(Map("uuid" -> "v1", "oday" -> date, "journey_type" -> "journey")),
+      row(Map("uuid" -> "v2", "oday" -> "not-a-day", "journey_type" -> ""))))
+    put("LightPriorityEvent", s"$date-0.csv", Seq(
+      tlpRow(Map("uuid" -> "t1", "oday" -> date, "tlp_requestid" -> "42"))))
+    val sinkDir = Files.createTempDirectory("hfpwirequirksink").toString
+    val sink = ParquetDaySink(sinkDir)
+    HfpLoadJob.loadDay(sc, root, sink, date, includeLightPriority = true)
+    // the late files: re-sent keys (NULL-oday ones too), padded, quoted
+    // and empty values, a within-run duplicate, and every journey_type
+    // the route split has to get right
+    put("StopEvent", s"$date-1.csv", Seq(
+      row(Map("uuid" -> "s1", "oday" -> date)),
+      row(Map("uuid" -> "s2", "oday" -> "")),
+      row(Map("uuid" -> "  s3  ", "oday" -> s" $date ", "dl" -> "42px", "spd" -> "0.0",
+        "drst" -> "false", "tst" -> "1612854765123")),
+      row(Map("uuid" -> "\" s4 \"", "oday" -> "", "desi" -> "\" 55 , X \"")),
+      row(Map("uuid" -> "\"\"", "oday" -> date)),
+      row(Map("uuid" -> "   ", "oday" -> date)),
+      row(Map("uuid" -> "s5", "oday" -> "garbage", "veh" -> "0")),
+      row(Map("uuid" -> "s5", "oday" -> "garbage", "veh" -> "7"))))
+    put("VehiclePosition", s"$date-1.csv", Seq(
+      row(Map("uuid" -> "v1", "oday" -> date, "journey_type" -> "journey")),
+      row(Map("uuid" -> "v2", "oday" -> "not-a-day", "journey_type" -> "")),
+      row(Map("uuid" -> "v3", "oday" -> date, "journey_type" -> "journey")),
+      row(Map("uuid" -> "v4", "oday" -> date, "journey_type" -> "")),
+      row(Map("uuid" -> "v5", "oday" -> date, "journey_type" -> "\"\"")),
+      row(Map("uuid" -> "v6", "oday" -> date, "journey_type" -> "  journey  ")),
+      row(Map("uuid" -> "v7", "oday" -> date, "journey_type" -> "\" journey \"")),
+      row(Map("uuid" -> "v8", "oday" -> "", "journey_type" -> "deadrun")),
+      row(Map("uuid" -> "v9", "oday" -> "1612854765123", "journey_type" -> "journey"))))
+    put("LightPriorityEvent", s"$date-1.csv", Seq(
+      tlpRow(Map("uuid" -> "t1", "oday" -> date)),
+      tlpRow(Map("uuid" -> "t2", "oday" -> "", "tlp_requestid" -> "garbage", "sid" -> "0")),
+      tlpRow(Map("uuid" -> "t3", "oday" -> date, "tlp_prioritylevel" -> "  high  "))))
+
+    // the cast-first formulation over every file, against the same key
+    // snapshot, frozen (collected) before the re-run writes
+    val groupTables = Seq(
+      ("StopEvent", Seq("stopevent"), HfpCsvSource.columns),
+      ("VehiclePosition", Seq("vehicleposition", "unsignedevent"), HfpCsvSource.columns),
+      ("LightPriorityEvent", Seq("lightpriorityevent"), HfpCsvSource.lightPriorityEventColumns))
+    def typedRows(df: DataFrame, cols: Seq[String]) =
+      df.select(cols.map(col): _*).collect().toSeq
+    val expected = groupTables.flatMap { case (group, tables, cols) =>
+      // the listed files, as loadDay reads them (a glob would make the
+      // reader stat the pattern and log a FileStreamSink WARN)
+      val files = Files.list(Paths.get(root, "csv", group)).toArray.toSeq.map(_.toString)
+      val typed =
+        if (group == "LightPriorityEvent")
+          HfpCsvSource.castAllLightPriority(HfpCsvSource.readLightPriority(spark, files: _*))
+        else HfpCsvSource.castAll(HfpCsvSource.read(spark, files: _*))
+      val keySeq = tables.flatMap(t =>
+        sink.existingKeys(spark, t, date).collect().map(_.getString(0)))
+      val keys = spark.createDataFrame(keySeq.map(Tuple1(_))).toDF("uuid")
+      val fresh = typed.where(col("uuid").isNotNull && col("uuid") =!= "")
+        .join(keys, Seq("uuid"), "left_anti")
+      val routes =
+        if (group == "VehiclePosition")
+          Seq("vehicleposition" -> fresh.where(col("journey_type") === "journey"),
+            "unsignedevent" -> fresh.where(
+              col("journey_type").isNull || col("journey_type") =!= "journey"))
+        else Seq(tables.head -> fresh)
+      routes.map { case (t, df) => t -> (cols, typed.schema, typedRows(df, cols)) }
+    }.toMap
+    // what each table holds before the re-run, read with the cast schema
+    def stored(t: String) = {
+      val (cols, schema, _) = expected(t)
+      typedRows(spark.read.schema(schema).parquet(s"$sinkDir/$t"), cols)
+    }
+    val held = expected.keys.map(t => t -> stored(t)).toMap
+    val counts = HfpLoadJob.loadDay(sc, root, sink, date, includeLightPriority = true)
+
+    def bag(rows: Seq[org.apache.spark.sql.Row]) = rows.groupBy(identity).view.mapValues(_.size).toMap
+    expected.foreach { case (t, (_, _, rows)) =>
+      val appended = stored(t).diff(held(t))
+      assert(counts(t) == rows.size, s"$t: $counts")
+      assert(bag(appended) == bag(rows),
+        s"$t appended:\n${appended.mkString("\n")}\nexpected:\n${rows.mkString("\n")}")
+    }
+    // the fixture exercises what it claims: NULL-oday survivors, an
+    // empty journey_type routed to unsignedevent, the TLP casts
+    def uuids(t: String) = expected(t)._3.map(_.getAs[String]("uuid")).toSet
+    assert(uuids("stopevent") == Set("s3", " s4 ", "s5"), uuids("stopevent").toString)
+    assert(expected("stopevent")._3.exists(_.isNullAt(HfpCsvSource.columns.indexOf("oday"))))
+    assert(uuids("vehicleposition") == Set("v3", "v6", "v9"), uuids("vehicleposition").toString)
+    assert(uuids("unsignedevent") == Set("v4", "v5", "v7", "v8"), uuids("unsignedevent").toString)
+    assert(uuids("lightpriorityevent") == Set("t2", "t3"), uuids("lightpriorityevent").toString)
+  }
+
   test("bootstrapDdl: loadDay against a ZERO-table database creates its tables from the generator") {
     import graft.sources.JdbcDaySink
     // the reference pre-applies its migration; the opt-in bootstrap is
@@ -454,35 +645,33 @@ class HfpLoadJobSpec extends SparkSuite {
     // handed a glob, the reader's metadata-directory probe stats the
     // pattern as a path and logs a WARN with a FileNotFoundException
     // trace per group read
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    import scala.jdk.CollectionConverters._
-    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("fileStreamSinkWarns", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel.isMoreSpecificThan(Level.WARN))
-          warns.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    val logger = LogManager.getLogger(
-      classOf[org.apache.spark.sql.execution.streaming.sinks.FileStreamSink].getName)
-      .asInstanceOf[Logger]
-    val level = logger.getLevel
-    logger.addAppender(appender)
-    logger.setLevel(Level.WARN)
-    val counts =
-      try HfpLoadJob.loadDay(sc, writeArchive(),
+    val (counts, warns) = warnsLogged(
+      classOf[org.apache.spark.sql.execution.streaming.sinks.FileStreamSink].getName) {
+      HfpLoadJob.loadDay(sc, writeArchive(),
         Files.createTempDirectory("hfpwarnsink").toString, date)
-      finally {
-        logger.removeAppender(appender)
-        logger.setLevel(level)
-        appender.stop()
-      }
+    }
     assert(counts.values.sum == 6L, counts.toString)
-    assert(warns.isEmpty, warns.asScala.mkString("\n"))
+    assert(warns.isEmpty, warns.mkString("\n"))
+  }
+
+  test("the key snapshots are freed without the lineage WARN") {
+    // `RDD.unpersist` on a locally checkpointed RDD WARNs that its
+    // lineage is truncated, once per populated group; the load frees
+    // its snapshots' blocks without it
+    val ctx = sc.sparkContext
+    val before = ctx.getPersistentRDDs.keySet.toSet
+    val (counts, warns) = warnsLogged(
+      "org.apache.spark.rdd.MapPartitionsRDD") { // private[spark], no classOf
+      HfpLoadJob.loadDay(sc, writeArchive(),
+        Files.createTempDirectory("hfpunpinsink").toString, date)
+    }
+    assert(counts.size == 4 && counts.values.sum == 6L, counts.toString)
+    val lineage = warns.filter(_.contains("was locally checkpointed"))
+    assert(lineage.isEmpty, lineage.mkString("\n"))
+    val snapshots = ctx.getPersistentRDDs.filter { case (id, rdd) =>
+      !before.contains(id) && rdd.isCheckpointed
+    }
+    assert(snapshots.isEmpty, snapshots.values.mkString(", "))
   }
 
   test("opt-in LightPriorityEvent route loads the 57-column TLP wire format") {

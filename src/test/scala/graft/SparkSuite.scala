@@ -55,4 +55,36 @@ trait SparkSuite extends AnyFunSuite {
       (result, stages.values.asScala.toSeq.sortBy(_.stageId), tasks.asScala.toSeq)
     } finally ctx.removeSparkListener(listener)
   }
+
+  /** Runs `body` with the log4j2 logger `logger` at WARN and returns
+    * its result plus the messages of every WARN or worse that logger
+    * emitted meanwhile.
+    */
+  def warnsLogged[A](logger: String)(body: => A): (A, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender(s"warns-${java.util.UUID.randomUUID}", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val log = LogManager.getLogger(logger).asInstanceOf[Logger]
+    val level = log.getLevel
+    log.addAppender(appender)
+    log.setLevel(Level.WARN)
+    val result =
+      try body
+      finally {
+        log.removeAppender(appender)
+        log.setLevel(level)
+        appender.stop()
+      }
+    (result, warns.asScala.toSeq)
+  }
 }
