@@ -83,7 +83,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadavg()
     val wallStart = System.nanoTime()
-    // plain posture: the reference host runs local[32] with 32 shuffle
+    // the reference host runs local[32] with 32 shuffle
     // partitions; SPARK_GRAFT_CPUS is a dev-only override
     val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("WARN")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * that is not a positive integer fails naming the variable. The count
   * sets both the local thread count and the shuffle partitions.
   *
-  * Plain posture (the default):
+  * The session (one posture for every caller):
   *  - `local[cores]` (a caller may pass a deployment master instead)
   *    with `cores` shuffle partitions
   *  - cached-plan output coalescing (see the conf below)
@@ -22,16 +22,13 @@ import org.apache.spark.sql.SparkSession
   *  - AQE with partition coalescing and skew-join splitting, and
   *    128 MiB scan splits, are Spark 4's defaults and are not restated
   *
-  * Engine posture (`engine = true`): the plain posture plus
-  * [[graft.functions.GraftExtensions]] (the graft_* kernels, the
-  * self-dot optimizer rule and the custom operators' strategies at
-  * session build, no runtime registration) and the
-  * [[graft.functions.SqlCompat]] name aliases. This is the `Graft`
-  * facade's session.
-  *
-  * Bench and Verify stay plain: each registry query registers its
-  * kernels at runtime (`GraftExpressions.register`, via `Tables`), and
-  * the extensions' `RewriteSelfDot` float rewrite could move
+  * Kernels are installed at runtime: a table read registers the
+  * graft_* functions and the custom operators' strategies on the
+  * session (`GraftExpressions.register`, via `Tables`). A deployment
+  * that wants them at session build instead, plus the self-dot
+  * optimizer rule, sets the one extension conf named on
+  * [[graft.functions.GraftExtensions]] at submit; this factory never
+  * sets it, because `RewriteSelfDot`'s float rewrite could move
   * oracle-exact results.
   */
 object GraftSession {
@@ -48,15 +45,14 @@ object GraftSession {
           s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
     }
 
-  /** The session in the plain posture, or the engine posture when
-    * `engine`. `master` replaces `local[cores]` for a deployment. If
-    * the JVM already has a session it is returned with the runtime confs
-    * applied; static ones (the codegen cache size, the extensions) keep
-    * the values it was built with.
+  /** The session. `master` replaces `local[cores]` for a deployment.
+    * If the JVM already has a session it is returned with the runtime
+    * confs applied; static ones (the codegen cache size) keep the values
+    * it was built with.
     */
-  def build(cores: Int = GraftSession.cores(), engine: Boolean = false,
-      master: Option[String] = None): SparkSession = {
-    val plain = SparkSession.builder()
+  def build(cores: Int = GraftSession.cores(),
+      master: Option[String] = None): SparkSession =
+    SparkSession.builder()
       .appName("graft")
       .master(master.getOrElse(s"local[$cores]"))
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -80,22 +76,5 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    if (!engine) plain.getOrCreate()
-    else {
-      val spark = plain
-        .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
-        .getOrCreate()
-      // DuckDB-dialect alias pack (string_split/unnest/list_*/range…):
-      // NAME aliases only — temp-function scope, every alias a native
-      // codegen'd expression, and a temp function can never shadow a
-      // builtin, so user SQL that never says these names is untouched.
-      // The dialect's PARSER settings (raw string literals, double-quoted
-      // identifiers, …) change how existing user SQL parses and are NOT
-      // applied implicitly (ADVICE r12): opt in per session with
-      // SqlCompat.register(spark, dialectSession = true) or per block
-      // with SqlCompat.withDialectSession (what the parity paths do).
-      graft.functions.SqlCompat.register(spark)
-      spark
-    }
-  }
+      .getOrCreate()
 }

@@ -951,13 +951,16 @@ object GraftExpressions {
   }
 }
 
-/** Proper deployment path: `GraftSession.build(engine = true)` (or
-  * `spark.sql.extensions=graft.functions.GraftExtensions` on any other
-  * session) gives the COMPLETE engine at session build time
-  * with zero runtime registration: every graft_* kernel (the float
-  * fast-path variants included), the self-dot optimizer rule, and the
-  * custom physical operators' planner strategies (GroupedTopK,
-  * AsOfJoin). A cluster submit needs only the jar and this one conf.
+/** Deploy-time install: submitting the jar with
+  * `--conf spark.sql.extensions=graft.functions.GraftExtensions` gives
+  * a session the COMPLETE engine at build time with zero runtime
+  * registration: every graft_* kernel (the float fast-path variants
+  * included), the self-dot optimizer rule, and the custom physical
+  * operators' planner strategies (GroupedTopK, AsOfJoin, RangeJoin).
+  * It is the only path that installs `RewriteSelfDot`, so
+  * [[graft.GraftSession]] (Bench, Verify, the CLI) never sets it: the
+  * float rewrite could move oracle-exact results. Without it the
+  * kernels arrive at runtime through [[GraftExpressions.register]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo

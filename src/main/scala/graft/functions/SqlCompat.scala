@@ -303,10 +303,9 @@ object SqlCompat {
       Percentile(es(0), es(1), Literal(1L)).toAggregateExpression()))
 
   /** Register the NAME aliases on a live session (idempotent,
-    * temp-function scope — this is the part that is safe to apply
-    * implicitly, and all [[graft.GraftSession]] does: a temp function
-    * can never shadow a Spark builtin, so user SQL that never says
-    * `list_sort`/`string_split`/… is untouched).
+    * temp-function scope — safe to apply to any session: a temp
+    * function can never shadow a Spark builtin, so user SQL that never
+    * says `list_sort`/`string_split`/… is untouched).
     *
     * The four PARSER/SESSION settings that complete the dialect (raw
     * string literals, ANSI double-quoted identifiers, unchunked base64,
@@ -314,20 +313,14 @@ object SqlCompat {
     * Spark's default unescapes `'\s'` to `'s'`, so flipping raw
     * literals under a user silently changes every regex they wrote for
     * the default. They are therefore NOT applied here (ADVICE r12):
-    * opt in explicitly with `register(spark, dialectSession = true)`
-    * for a session that runs DuckDB-dialect SQL end-to-end (the parity
-    * probe), or scope them to a block with [[withDialectSession]] (the
-    * parity/compat suites on the shared test session).
+    * scope them to a block with [[withDialectSession]] (the parity
+    * probe and the parity/compat suites).
     */
-  def register(spark: SparkSession): Unit = register(spark, dialectSession = false)
-
-  def register(spark: SparkSession, dialectSession: Boolean): Unit = {
+  def register(spark: SparkSession): Unit =
     fns.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
-    if (dialectSession) setDialectConfs(spark)
-  }
 
   /** The dialect's session settings: DuckDB quotes identifiers with
     * double quotes (`"1-URGENT"` — ANSI behavior Spark gates behind a
@@ -347,9 +340,6 @@ object SqlCompat {
     "spark.sql.parser.escapedStringLiterals" -> "true",
     "spark.sql.chunkBase64String.enabled" -> "false")
 
-  private def setDialectConfs(spark: SparkSession): Unit =
-    dialectConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-
   /** Run `f` with the dialect session settings applied, restoring each
     * conf's prior value (or unset state) afterwards — the scoping the
     * shared-session test suites use so DuckDB-dialect statements parse
@@ -361,7 +351,7 @@ object SqlCompat {
     val prior = dialectConfs.map { case (k, _) =>
       k -> (try spark.conf.getOption(k) catch { case _: Exception => None })
     }
-    setDialectConfs(spark)
+    dialectConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     try f
     finally prior.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

@@ -49,12 +49,16 @@ object HfpLoadJob {
 
   /** Build the sink from the CLI's sink argument: a `jdbc:` URL selects
     * the reference's actual sink shape (Postgres), anything else is a
-    * warehouse directory for the parquet twin. Credentials and batching
-    * come from the secrets-resolved environment (X1,
+    * warehouse directory for the parquet twin. The URL carries host,
+    * port, database and ssl settings; credentials and batching come from
+    * the secrets-resolved environment (X1,
     * [[graft.sources.SecretsConfig]]) with the reference's exact keys:
     * PGUSER/PGPASSWORD, EVENT_BATCH_SIZE, INSERT_CONCURRENCY
-    * (constants.ts:35-52). INSERT_CONCURRENCY caps the concurrent insert
-    * connections, like the reference's PQueue ([[graft.sources.JdbcSink]]).
+    * (constants.ts:35-52). Missing credentials, or a batch size or
+    * concurrency that is set but not a positive integer, throw
+    * `IllegalArgumentException` before any Spark work. INSERT_CONCURRENCY
+    * caps the concurrent insert connections, like the reference's PQueue
+    * ([[graft.sources.JdbcDaySink]]).
     */
   private[graft] def sinkFor(arg: String,
       env: Map[String, String] = sys.env,
@@ -71,8 +75,16 @@ object HfpLoadJob {
         throw new IllegalArgumentException(
           s"jdbc sink requires ${missing.mkString(" and ")} in the " +
             "environment or /run/secrets")
+      // unset or blank keeps the reference default; anything else must
+      // be a positive integer, checked here, not at the first route's
+      // write (after the key snapshots, maybe after other groups' appends)
       def num(key: String, dflt: Int): Int =
-        e.get(key).flatMap(_.trim.toIntOption).getOrElse(dflt)
+        e.get(key).map(_.trim).filter(_.nonEmpty) match {
+          case None => dflt
+          case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
+            throw new IllegalArgumentException(
+              s"$key must be a positive integer, got '${e(key)}'"))
+        }
       // the USED values must be the VALIDATED values: the user is
       // trimmed (identifiers never legitimately carry edge whitespace —
       // a secrets file preserving a trailing space would pass the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.HfpCasts._
-import graft.sources.Tables
+import graft.sources.{ParquetDaySink, Tables}
 
 /** The reference's whole dataflow DAG (SURVEY.md §2), rebuilt as
   * declarative DataFrame transforms over the driver's `events` table:
@@ -228,8 +228,7 @@ object HfpPipeline {
       .persist()
     try
       Seq("stopevent", "otherevent", "vehicleposition", "unsignedevent")
-        .foreach(t =>
-          graft.sources.JdbcSink.writeParquet(seed, s"$tmp/seed_sink", t))
+        .foreach(ParquetDaySink(s"$tmp/seed_sink").append(seed, _))
     finally seed.unpersist(blocking = false)
     tmp
   }
@@ -312,7 +311,7 @@ object HfpPipeline {
     val seed = events
       .where(id % 10 < 3 && id % 97 =!= 0)
       .select(seedCols: _*)
-    graft.sources.JdbcSink.writeParquet(seed, s"$tmp/seed_sink", "lightpriorityevent")
+    ParquetDaySink(s"$tmp/seed_sink").append(seed, "lightpriorityevent")
     tmp
   }
 

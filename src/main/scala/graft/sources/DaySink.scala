@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -74,8 +74,14 @@ final case class ParquetDaySink(dir: String) extends DaySink {
     else DaySink.emptyKeys(spark)
   }
 
+  /** One directory per target table, partitioned by operating day so
+    * the next run's key scan is partition-pruned (the `oday` layout the
+    * reference keys its dedup scans on).
+    */
   override def append(df: DataFrame, table: String): Unit =
-    JdbcSink.writeParquet(df, dir, table)
+    df.write.mode(SaveMode.Append)
+      .partitionBy("oday")
+      .parquet(s"$dir/$table")
 }
 
 /** The reference's actual sink shape: a JDBC database (Postgres there,
@@ -88,13 +94,26 @@ final case class ParquetDaySink(dir: String) extends DaySink {
   * scans push projection+predicate down (getEvents.ts:9-16); writes are
   * plain batched INSERT appends (upsert.ts:6-55 — the "upsert" never
   * updates).
+  *
+  * The mapping that replaces the reference's hand-rolled machinery
+  * (hfpTask.ts:53-80):
+  *  - `INSERT_CONCURRENCY` (bounded PQueue) → `numPartitions`, an upper
+  *    bound: a `coalesce`, one JDBC connection per partition, no shuffle.
+  *    More upstream splits run scan+cast+insert in `numPartitions` tasks,
+  *    the trade Spark's own JDBC writer makes; inserts are database-bound
+  *  - `EVENT_BATCH_SIZE` (rows per INSERT) → `batchSize`, the writer's
+  *    `batchsize` option (executeBatch under the hood)
+  *  - `item[key] || null` falsy→NULL netting → already folded into the
+  *    cast layer (HfpCasts), so the sink writes values as-is
+  *  - fail-fast on insert error (hfpTask.ts:46-49) → task failure fails
+  *    the job (retries configurable, idempotent thanks to dedup)
   */
 final case class JdbcDaySink(
     url: String,
     user: String = "",
     password: String = "",
-    batchSize: Int = 1000,
-    numPartitions: Int = 100,
+    batchSize: Int = 1000, // EVENT_BATCH_SIZE default, constants.ts:52
+    numPartitions: Int = 100, // INSERT_CONCURRENCY default, constants.ts:51
     bootstrapDdl: Boolean = false) extends DaySink {
 
   /** Tables already probed this sink instance — the existence check is
@@ -145,17 +164,35 @@ final case class JdbcDaySink(
       ensured.add(table)
     }
 
-  private def cfg(table: String): JdbcSink.Config =
-    JdbcSink.Config(url, table, user, password, batchSize, numPartitions)
+  private def props: java.util.Properties = {
+    val p = new java.util.Properties()
+    p.setProperty("user", user)
+    p.setProperty("password", password)
+    p
+  }
 
+  /** Spark's JDBC source pushes both the `where` and the `select` down
+    * to the database: the reference's `SELECT uuid WHERE oday = ?`, plus
+    * `OR oday IS NULL` ([[DaySink.onDays]]).
+    */
   override def existingKeys(spark: SparkSession, table: String,
       days: String*): DataFrame = {
     ensureTable(table)
-    JdbcSink.readKeys(spark, cfg(table), days: _*)
+    spark.read.jdbc(url, table, props)
+      .where(DaySink.onDays(days))
+      .select("uuid")
   }
 
+  /** Batched INSERT append on at most `numPartitions` connections. Not
+    * the writer's `numPartitions` option: it probes `df.rdd` in a
+    * separate execution, from which an `Observation` on `df` fires 0.
+    */
   override def append(df: DataFrame, table: String): Unit = {
     ensureTable(table)
-    JdbcSink.write(df, cfg(table))
+    df.coalesce(numPartitions)
+      .write
+      .mode(SaveMode.Append)
+      .option("batchsize", batchSize.toString)
+      .jdbc(url, table, props)
   }
 }

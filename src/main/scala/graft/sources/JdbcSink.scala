@@ -1,68 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-
-/** The reference's Postgres surface re-expressed as Spark JDBC I/O.
-  *
-  * Source side (S3 — getEvents.ts:9-16): the dedup-key scan with
-  * projection and predicate pushed down to the database. Sink side
-  * (K1/K2 — hfpTask.ts:53-80 + upsert.ts:6-55): batched multi-row
-  * INSERTs with bounded concurrency.
-  *
-  * The mapping that replaces the reference's hand-rolled machinery:
-  *  - `INSERT_CONCURRENCY` (bounded PQueue)  → `numPartitions`, an upper
-  *    bound: a `coalesce`, one JDBC connection per partition, no shuffle.
-  *    More upstream splits run scan+cast+insert in `numPartitions` tasks,
-  *    the trade Spark's own JDBC writer makes; inserts are database-bound
-  *  - `EVENT_BATCH_SIZE` (rows per INSERT)   → `batchsize` option
-  *    (executeBatch under the hood)
-  *  - `item[key] || null` falsy→NULL netting → already folded into the
-  *    cast layer (HfpCasts), so the sink writes values as-is
-  *  - "upsert" that is really plain INSERT   → SaveMode.Append
-  *  - fail-fast on insert error (hfpTask.ts:46-49) → task failure fails
-  *    the job (retries configurable, idempotent thanks to dedup)
-  *
-  * No database runs in the test harness, so this module is exercised at
-  * the API level (plan construction) and by the parquet twin below,
-  * which the driver-facing queries use.
+/** The reference's Postgres schema re-expressed as DDL
+  * (postgres_schema.sql:1-61): the sink table's columns and types per
+  * dialect. The JDBC I/O itself (key scan, batched append) lives on
+  * [[JdbcDaySink]]; this object only says what a table looks like, for
+  * `JdbcDaySink`'s opt-in bootstrap and for callers that create the
+  * tables themselves (the Derby specs, the day-load benchmark's seed).
   */
 object JdbcSink {
-
-  final case class Config(
-    url: String,
-    table: String,
-    user: String = "",
-    password: String = "",
-    batchSize: Int = 1000, // EVENT_BATCH_SIZE default, constants.ts:52
-    numPartitions: Int = 100) // INSERT_CONCURRENCY default, constants.ts:51
-
-  private def props(cfg: Config): java.util.Properties = {
-    val p = new java.util.Properties()
-    p.setProperty("user", cfg.user)
-    p.setProperty("password", cfg.password)
-    p
-  }
-
-  /** S3: key scan with pushed projection + predicate. Spark's JDBC
-    * source pushes both `where` and `select` down to the database: the
-    * reference's `SELECT uuid WHERE oday = ?`, plus `OR oday IS NULL`
-    * ([[DaySink.existingKeys]]).
-    */
-  def readKeys(spark: SparkSession, cfg: Config, odays: String*): DataFrame =
-    spark.read.jdbc(cfg.url, cfg.table, props(cfg))
-      .where(DaySink.onDays(odays))
-      .select("uuid")
-
-  /** K1/K2: batched INSERT append on at most `numPartitions` connections.
-    * Not the writer's `numPartitions` option: it probes `df.rdd` in a
-    * separate execution, from which an `Observation` on `df` fires 0.
-    */
-  def write(df: DataFrame, cfg: Config): Unit =
-    df.coalesce(cfg.numPartitions)
-      .write
-      .mode(SaveMode.Append)
-      .option("batchsize", cfg.batchSize.toString)
-      .jdbc(cfg.url, cfg.table, props(cfg))
 
   /** DDL dialects for [[createTableDdl]]: `Derby` (default) maps the
     * cast-type table to what the engine actually writes through Spark's
@@ -148,14 +93,4 @@ object JdbcSink {
     }
     s"CREATE TABLE $table (${cols.mkString(", ")})"
   }
-
-  /** Parquet twin of the sink for harness runs (same routing shape:
-    * one directory per target table, partitioned by operating day for
-    * partition-pruned re-reads — the `oday` layout the reference keys
-    * its dedup scans on).
-    */
-  def writeParquet(df: DataFrame, baseDir: String, table: String): Unit =
-    df.write.mode(SaveMode.Append)
-      .partitionBy("oday")
-      .parquet(s"$baseDir/$table")
 }

@@ -45,26 +45,4 @@ object SecretsConfig {
       else Seq.empty
     env.map { case (k, v) => k -> resolveKey(k, Some(v), dir, listing).getOrElse(v) }
   }
-
-  /** The PG connection surface (constants.ts:35-52) as a JdbcSink
-    * config: host/port/user/password/database from the resolved env,
-    * batch size and insert concurrency with the reference defaults.
-    */
-  def jdbcConfig(table: String, env: Map[String, String] = sys.env,
-      secretsPath: String = DefaultSecretsPath): JdbcSink.Config = {
-    val e = resolve(env, secretsPath)
-    def num(key: String, dflt: Int): Int =
-      e.get(key).flatMap(_.trim.toIntOption).getOrElse(dflt)
-    val host = e.getOrElse("PGHOST", "localhost")
-    val port = num("PGPORT", 5432)
-    val db = e.getOrElse("PGDATABASE", "")
-    val ssl = e.get("PG_SSL").contains("true")
-    JdbcSink.Config(
-      url = s"jdbc:postgresql://$host:$port/$db" + (if (ssl) "?ssl=true" else ""),
-      table = table,
-      user = e.getOrElse("PGUSER", ""),
-      password = e.getOrElse("PGPASSWORD", ""),
-      batchSize = num("EVENT_BATCH_SIZE", 1000), // constants.ts:52
-      numPartitions = num("INSERT_CONCURRENCY", 100)) // constants.ts:51
-  }
 }

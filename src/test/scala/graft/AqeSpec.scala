@@ -48,18 +48,18 @@ class AqeSpec extends SparkSuite {
     }
   }
 
-  test("GraftSession encodes the scale posture and injects the extensions") {
+  test("GraftSession encodes the scale posture") {
     // the JVM-wide session already exists; builder config lands on a
     // fresh session only for the NEW confs — assert via a dedicated
     // check of the factory's settings object instead of a new JVM:
     // here the shared session accepts runtime confs, so verify the
     // factory's session returns the expected runtime values.
-    val s = GraftSession.build(cores = 8, engine = true)
+    val s = GraftSession.build(cores = 8)
     try {
       assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
       assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
       assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
-      // the extensions make the custom kernels visible to plain SQL
+      // runtime registration makes the custom kernels visible to plain SQL
       graft.functions.GraftExpressions.register(s)
       val r = s.sql(
         "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").collect()

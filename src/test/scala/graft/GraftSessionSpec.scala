@@ -3,9 +3,9 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** The session factory: its core-count rule, the plain posture as the
-  * suites see it, and that no other main-code site builds a session or
-  * adds an entry point.
+/** The session factory: its core-count rule, its one posture as the
+  * suites see it, and that no other main-code site builds a session,
+  * sets the extensions conf or adds an entry point.
   */
 class GraftSessionSpec extends SparkSuite {
 
@@ -38,6 +38,9 @@ class GraftSessionSpec extends SparkSuite {
       case f: Path if Files.readString(f).contains(needle) => f.getFileName.toString
     }.toSet
     assert(sitesOf("SparkSession.builder") == Set("GraftSession.scala"))
+    // one posture: no main-code session sets the extensions conf; only
+    // GraftExtensions' own doc names it, for deploy-time installs
+    assert(sitesOf("spark.sql.extensions") == Set("GraftExpressions.scala"))
     assert(sitesOf("def main") ==
       Set("Bench.scala", "Verify.scala", "HfpLoadJob.scala", "Dev.scala"))
   }

@@ -790,6 +790,25 @@ class HfpLoadJobSpec extends SparkSuite {
       HfpLoadJob.sinkFor("jdbc:postgresql://h/db",
         Map("PGUSER" -> " ", "PGPASSWORD" -> "pw"), secrets.toString)
     }
+    // a set batch size or concurrency must be a positive integer: "0"
+    // would otherwise fail only inside coalesce(0) at the first write
+    val creds = Map("PGUSER" -> "app", "PGPASSWORD" -> "pw")
+    for (key <- Seq("EVENT_BATCH_SIZE", "INSERT_CONCURRENCY");
+        v <- Seq("0", "-1", "abc")) {
+      val bad = intercept[IllegalArgumentException] {
+        HfpLoadJob.sinkFor("jdbc:postgresql://h/db", creds + (key -> v),
+          secrets.toString)
+      }
+      assert(bad.getMessage.contains(key), bad.getMessage)
+    }
+    // blank keeps the reference default, as unset does
+    HfpLoadJob.sinkFor("jdbc:postgresql://h/db",
+      creds ++ Map("EVENT_BATCH_SIZE" -> " ", "INSERT_CONCURRENCY" -> ""),
+      secrets.toString) match {
+      case j: graft.sources.JdbcDaySink =>
+        assert(j.batchSize == 1000 && j.numPartitions == 100)
+      case other => fail(s"expected JdbcDaySink, got $other")
+    }
     // the parquet twin needs no credentials at all
     import graft.sources.ParquetDaySink
     assert(HfpLoadJob.sinkFor("/wh", Map.empty, secrets.toString) ==

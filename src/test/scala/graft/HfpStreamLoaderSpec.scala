@@ -155,7 +155,7 @@ class HfpStreamLoaderSpec extends SparkSuite {
         .option("header", "false")
         .csv(Paths.get(root, "csv", "VehiclePosition").toString))
       .where(col("uuid") === "j1")
-    graft.sources.JdbcSink.writeParquet(partial, sink, "vehicleposition")
+    graft.sources.ParquetDaySink(sink).append(partial, "vehicleposition")
     // restart from scratch (the crashed run's checkpoint never
     // committed the batch, so a fresh checkpoint is the same re-read)
     val q = HfpStreamLoader.start(sc, root, sink, "VehiclePosition",

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.JdbcSink
+import graft.sources.{JdbcDaySink, JdbcSink}
 
 /** Real JDBC round trip against embedded Derby (ships with Spark):
   * exercises the K1/K2 sink (batched concurrent append) and the S3 key
@@ -11,7 +11,7 @@ import graft.sources.JdbcSink
 class JdbcSinkSpec extends SparkSuite {
 
   private val url = "jdbc:derby:memory:graftdb;create=true"
-  private val cfg = JdbcSink.Config(url, "hfp_keys", batchSize = 50, numPartitions = 2)
+  private val sink = JdbcDaySink(url, batchSize = 50, numPartitions = 2)
 
   test("append writes batched+partitioned; key scan pushes filter and projection") {
     import spark.implicits._
@@ -25,9 +25,9 @@ class JdbcSinkSpec extends SparkSuite {
     val day1 = (1 to 100).map(i => (s"u$i", "2021-02-09", i.toDouble))
     val day2 = (101 to 120).map(i => (s"u$i", "2021-02-10", i.toDouble))
     val df = sc.createDataFrame(day1 ++ day2).toDF("uuid", "oday", "value")
-    JdbcSink.write(df, cfg)
+    sink.append(df, "hfp_keys")
 
-    val keys = JdbcSink.readKeys(spark, cfg, "2021-02-09")
+    val keys = sink.existingKeys(spark, "hfp_keys", "2021-02-09")
     assert(keys.columns.toSeq == Seq("uuid"))
     val got = keys.collect().map(_.getString(0)).toSet
     assert(got == (1 to 100).map(i => s"u$i").toSet)
@@ -39,14 +39,15 @@ class JdbcSinkSpec extends SparkSuite {
 
     // idempotent reload: anti-join against existing keys -> nothing new
     val fresh = df.where(col("oday") === "2021-02-09")
-      .join(JdbcSink.readKeys(spark, cfg, "2021-02-09"), Seq("uuid"), "left_anti")
+      .join(sink.existingKeys(spark, "hfp_keys", "2021-02-09"), Seq("uuid"), "left_anti")
     assert(fresh.count() == 0)
 
     // late data for the same day: only the new rows land
     val late = Seq(("u999", "2021-02-09", 999.0)).toDF("uuid", "oday", "value")
-    JdbcSink.write(
-      late.join(JdbcSink.readKeys(spark, cfg, "2021-02-09"), Seq("uuid"), "left_anti"), cfg)
-    assert(JdbcSink.readKeys(spark, cfg, "2021-02-09").count() == 101)
+    sink.append(
+      late.join(sink.existingKeys(spark, "hfp_keys", "2021-02-09"), Seq("uuid"), "left_anti"),
+      "hfp_keys")
+    assert(sink.existingKeys(spark, "hfp_keys", "2021-02-09").count() == 101)
   }
 
   test("append bounds concurrency by coalescing: no shuffle, at most numPartitions tasks") {
@@ -78,7 +79,7 @@ class JdbcSinkSpec extends SparkSuite {
     sc.listenerManager.register(qel)
     val (_, stages, tasks) =
       try launched {
-        JdbcSink.write(df, cfg.copy(table = "coalesce_rows", numPartitions = 2))
+        sink.append(df, "coalesce_rows")
       } finally sc.listenerManager.unregister(qel)
     assert(tasks.nonEmpty && tasks.size <= 2, s"insert ran ${tasks.size} tasks")
     assert(stages.size == 1 && tasks.forall(_ == "ResultTask"),
@@ -102,11 +103,11 @@ class JdbcSinkSpec extends SparkSuite {
       "CREATE TABLE bc_keys (uuid VARCHAR(64), oday VARCHAR(16))")
     catch { case _: java.sql.SQLException => () }
     finally conn.close()
-    val bcCfg = JdbcSink.Config(url, "bc_keys", batchSize = 50, numPartitions = 1)
-    JdbcSink.write(
-      (1 to 5).map(i => (s"k$i", "2021-02-09")).toDF("uuid", "oday"), bcCfg)
-    val (buildSide, unpin) =
-      graft.jobs.HfpLoadJob.pinnedBuildSide(JdbcSink.readKeys(spark, bcCfg, "2021-02-09"))
+    val bcSink = JdbcDaySink(url, batchSize = 50, numPartitions = 1)
+    bcSink.append(
+      (1 to 5).map(i => (s"k$i", "2021-02-09")).toDF("uuid", "oday"), "bc_keys")
+    val (buildSide, unpin) = graft.jobs.HfpLoadJob.pinnedBuildSide(
+      bcSink.existingKeys(spark, "bc_keys", "2021-02-09"))
     try {
       val incoming = Seq("k1", "k9").toDF("uuid")
       val fresh = incoming.join(buildSide, Seq("uuid"), "left_anti")

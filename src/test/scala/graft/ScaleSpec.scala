@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.HfpPipeline
-import graft.sources.JdbcSink
+import graft.sources.ParquetDaySink
 
 /** Scale-pattern checks: partition-pruned re-reads of the routed sink
   * output, and streaming dedup as the streaming twin of A1.
@@ -13,8 +13,8 @@ class ScaleSpec extends SparkSuite {
   test("oday-partitioned sink output prunes partitions on re-read") {
     val base = Files.createTempDirectory("graft-sink").toString
     val out = HfpPipeline.full(sc, sfDir)
-    JdbcSink.writeParquet(out.where(col("target_table") === "vehicleposition")
-      .drop("target_table"), base, "vehicleposition")
+    ParquetDaySink(base).append(out.where(col("target_table") === "vehicleposition")
+      .drop("target_table"), "vehicleposition")
     val days = spark.read.parquet(s"$base/vehicleposition")
       .select("oday").distinct().collect().map(_.get(0)).filter(_ != null)
     assert(days.length > 1)

@@ -43,17 +43,4 @@ class SecretsConfigSpec extends AnyFunSuite {
       assert(SecretsConfig.resolve(Map("A" -> "x"), dir)("A") == "x")
     }
   }
-
-  test("jdbcConfig builds the PG connection with reference defaults") {
-    withSecrets(Map("PGPASSWORD1" -> "s3cret")) { dir =>
-      val cfg = SecretsConfig.jdbcConfig("stopevent", Map(
-        "PGHOST" -> "db.example", "PGPORT" -> "5433", "PGDATABASE" -> "hfp",
-        "PGUSER" -> "loader", "PGPASSWORD" -> "env", "PG_SSL" -> "true"), dir)
-      assert(cfg.url == "jdbc:postgresql://db.example:5433/hfp?ssl=true")
-      assert(cfg.user == "loader")
-      assert(cfg.password == "s3cret") // versioned file beats env
-      assert(cfg.batchSize == 1000 && cfg.numPartitions == 100)
-      assert(cfg.table == "stopevent")
-    }
-  }
 }

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for suites (one per suite via lazy val). */
 trait SparkSuite extends AnyFunSuite {
-  /** The plain posture the mains run, at 4 cores whatever
+  /** The session the mains run, at 4 cores whatever
     * SPARK_GRAFT_CPUS says, so plan gates see 4 shuffle partitions.
     */
   lazy val spark: SparkSession = GraftSession.build(cores = 4)
