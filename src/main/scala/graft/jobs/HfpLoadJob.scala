@@ -54,11 +54,12 @@ object HfpLoadJob {
     * the secrets-resolved environment (X1,
     * [[graft.sources.SecretsConfig]]) with the reference's exact keys:
     * PGUSER/PGPASSWORD, EVENT_BATCH_SIZE, INSERT_CONCURRENCY
-    * (constants.ts:35-52). Missing credentials, or a batch size or
-    * concurrency that is set but not a positive integer, throw
-    * `IllegalArgumentException` before any Spark work. INSERT_CONCURRENCY
-    * caps the concurrent insert connections, like the reference's PQueue
-    * ([[graft.sources.JdbcDaySink]]).
+    * (constants.ts:35-52). Missing credentials, a batch size or
+    * concurrency that is set but not a positive integer, or a
+    * GRAFT_BOOTSTRAP_DDL that is set but not one of 1/true/yes or
+    * 0/false/no, throw `IllegalArgumentException` before any Spark
+    * work. INSERT_CONCURRENCY caps the concurrent insert connections,
+    * like the reference's PQueue ([[graft.sources.JdbcDaySink]]).
     */
   private[graft] def sinkFor(arg: String,
       env: Map[String, String] = sys.env,
@@ -75,16 +76,17 @@ object HfpLoadJob {
         throw new IllegalArgumentException(
           s"jdbc sink requires ${missing.mkString(" and ")} in the " +
             "environment or /run/secrets")
-      // unset or blank keeps the reference default; anything else must
-      // be a positive integer, checked here, not at the first route's
-      // write (after the key snapshots, maybe after other groups' appends)
-      def num(key: String, dflt: Int): Int =
+      // unset or blank keeps the default; anything else must parse,
+      // checked here, not at the first route's write (after the key
+      // snapshots, maybe after other groups' appends)
+      def setting[A](key: String, dflt: A, want: String)(parse: String => Option[A]): A =
         e.get(key).map(_.trim).filter(_.nonEmpty) match {
           case None => dflt
-          case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
-            throw new IllegalArgumentException(
-              s"$key must be a positive integer, got '${e(key)}'"))
+          case Some(v) => parse(v).getOrElse(
+            throw new IllegalArgumentException(s"$key must be $want, got '${e(key)}'"))
         }
+      def num(key: String, dflt: Int): Int =
+        setting(key, dflt, "a positive integer")(_.toIntOption.filter(_ > 0))
       // the USED values must be the VALIDATED values: the user is
       // trimmed (identifiers never legitimately carry edge whitespace —
       // a secrets file preserving a trailing space would pass the
@@ -103,8 +105,12 @@ object HfpLoadJob {
         // postgres_schema.sql by out-of-band migration): opt-in
         // create-if-absent bootstrap so a load pointed at an empty
         // database gets the migration's column types
-        bootstrapDdl = e.get("GRAFT_BOOTSTRAP_DDL")
-          .exists(v => Set("1", "true", "yes").contains(v.trim.toLowerCase)))
+        bootstrapDdl = setting("GRAFT_BOOTSTRAP_DDL", false, "1/true/yes or 0/false/no")(
+          _.toLowerCase match {
+            case "1" | "true" | "yes" => Some(true)
+            case "0" | "false" | "no" => Some(false)
+            case _ => None
+          }))
     } else ParquetDaySink(arg)
 
   /** CLI entry: `HfpLoadJob <csvRoot> <sinkDirOrJdbcUrl> <date>` —
@@ -165,26 +171,51 @@ object HfpLoadJob {
     * sequences of small (often single-task) jobs, so overlapping them
     * back-fills the idle cores each chain's serial links leave behind.
     * Threads are created by the submitting thread, so Spark's
-    * inheritable local properties (job description/group) propagate.
-    * The first failure aborts the batch (remaining chains are
-    * interrupted) — the load is idempotent and a re-run heals a partial
-    * day, the same failure contract as the sequential shape.
+    * inheritable local properties (job description/group, job tags)
+    * propagate. The first failure aborts the batch: every chain's jobs
+    * carry the chain's tag, the siblings' jobs are cancelled and the
+    * siblings awaited before the failure is rethrown. Interrupting their
+    * driver threads would leave their jobs running, and a write that
+    * commits after the caller's re-run took its key snapshot would land
+    * twice. The load is idempotent and a re-run heals a partial day, the
+    * same failure contract as the sequential shape.
     */
-  private def runOverlapped[A, B](items: Seq[A])(f: A => B): Seq[B] =
+  private def runOverlapped[A, B](spark: SparkSession, items: Seq[A])(f: A => B): Seq[B] =
     if (items.lengthCompare(1) <= 0) items.map(f)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(items.size)
+      import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+      val sc = spark.sparkContext
+      val tags = items.indices.map(i => s"graft-chain-${java.util.UUID.randomUUID}-$i")
+      val pool = Executors.newFixedThreadPool(items.size)
       try {
-        val futures = items.map { i =>
-          pool.submit(new java.util.concurrent.Callable[B] {
-            override def call(): B = f(i)
+        val done = new ExecutorCompletionService[B](pool)
+        val futures = items.zip(tags).map { case (item, tag) =>
+          done.submit(new Callable[B] {
+            override def call(): B = {
+              sc.addJobTag(tag)
+              try f(item) finally sc.removeJobTag(tag)
+            }
           })
         }
-        futures.map { fut =>
-          try fut.get()
-          catch { case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause }
+        // completion order: a failing chain stops the others at once,
+        // whatever its place in the list
+        var pending = futures.size
+        var failure: Option[Throwable] = None
+        while (pending > 0 && failure.isEmpty) {
+          try done.take().get()
+          catch { case e: ExecutionException => failure = Some(e.getCause) }
+          pending -= 1
         }
+        failure.foreach { first =>
+          // a sibling between two jobs submits its next one after a
+          // cancel, so cancel again until every sibling has returned
+          while (pending > 0) {
+            tags.foreach(sc.cancelJobsWithTag(_, "a sibling load chain failed"))
+            if (done.poll(100, TimeUnit.MILLISECONDS) != null) pending -= 1
+          }
+          throw first
+        }
+        futures.map(_.get())
       } finally pool.shutdownNow()
     }
 
@@ -225,7 +256,7 @@ object HfpLoadJob {
     val present = dayGroups.map { case (group, table) =>
       (group, table, FsUtil.glob(spark, FsUtil.escapeGlob(s"$csvRoot/csv/$group/$date") + "*"))
     }.filter { case (_, _, files) => files.nonEmpty }
-    runOverlapped(present) { case (group, table, files) =>
+    runOverlapped(spark, present) { case (group, table, files) =>
       // Hash-spreading the wire rows on uuid before the cast layer was
       // A/B'd (the single-split day CSV makes every route stage one
       // task, event-log profiled) and measured 2× SLOWER end-to-end
@@ -307,7 +338,7 @@ object HfpLoadJob {
             "unsignedevent" -> routed.where(
               col("journey_type").isNull || col("journey_type") =!= "journey"))
         else Seq(table -> routed)
-      try runOverlapped(routes) { case (targetTable, df) =>
+      try runOverlapped(spark, routes) { case (targetTable, df) =>
         // ONE action per route: the appended-row count rides the write
         // itself as an observed metric, so the rows stream straight into
         // the sink. Counting first would run two jobs per route. A

@@ -838,7 +838,7 @@ object Analytics {
       |  round(list_aggregate(list_transform(embedding, x -> CAST(x AS DOUBLE)), 'sum'), 6) AS sum_vals
       |FROM embeddings ORDER BY vec_id""".stripMargin
 
-  /** Tumbling-window aggregation (batch shape of the streaming op). */
+  /** Tumbling-window aggregation. */
   def qTumblingWindow(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "events")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))

@@ -105,7 +105,7 @@ object DedupOps {
   // ---------------------------------------------------------------------
 
   private val NumPerms = 16
-  private[graft] val NumBands = 4 // 4 rows per band
+  private val NumBands = 4 // 4 rows per band
   private val JaccardThreshold = 0.5
 
   /** One base hash per shingle + affine permutations `(a·h+b) mod p`
@@ -121,7 +121,7 @@ object DedupOps {
   }
 
   /** doc_id + sig0..sig15 columns. */
-  private[graft] def minhashSigs(sh: DataFrame): DataFrame = {
+  private def minhashSigs(sh: DataFrame): DataFrame = {
     val base = col("h") % MersenneP
     val aggs = perms.zipWithIndex.map { case ((a, b), i) =>
       min((base * a + b) % MersenneP).as(s"sig$i")
@@ -129,7 +129,7 @@ object DedupOps {
     sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
-  private[graft] def bandKeys(sigs: DataFrame): DataFrame = {
+  private def bandKeys(sigs: DataFrame): DataFrame = {
     val bands = (0 until NumBands).map { b =>
       val parts = (0 until NumPerms / NumBands)
         .map(r => col(s"sig${b * (NumPerms / NumBands) + r}").cast(StringType))

@@ -43,14 +43,12 @@ import graft.sources.Tables
   */
 object GeoOps {
 
-  // shared with the streaming twin (EventsStream.cellOccupancy) so the
-  // batch and streaming coordinate syntheses can't drift
-  private[graft] val LatBase = 60.0
-  private[graft] val LngBase = 24.5
-  private[graft] val LatModulus = 40000L
-  private[graft] val LngModulus = 50000L
-  private[graft] val CoordScale = 1e-5
-  private[graft] val CellDeg = 0.001 // ~110 m of latitude, ~55 m of longitude at 60°N
+  private val LatBase = 60.0
+  private val LngBase = 24.5
+  private val LatModulus = 40000L
+  private val LngModulus = 50000L
+  private val CoordScale = 1e-5
+  private val CellDeg = 0.001 // ~110 m of latitude, ~55 m of longitude at 60°N
   // the 3×3 neighborhood only guarantees completeness while the radius
   // is ≤ the SMALLEST cell extent — longitude cells shrink by cos(lat),
   // so at 60°N the bound is ~55 m, and the radius sits safely under it
@@ -62,7 +60,7 @@ object GeoOps {
   private val RefLng = 24.9384
 
   /** Deterministic portable coordinates for an event row. */
-  private[graft] def withCoords(df: DataFrame): DataFrame =
+  private def withCoords(df: DataFrame): DataFrame =
     df.select(col("event_id"),
       (lit(LatBase) + (PortableHash.hash64(col("event_id").cast(StringType)) % LatModulus)
         .cast(DoubleType) * lit(CoordScale)).as("lat"),
@@ -77,7 +75,7 @@ object GeoOps {
     * rendered into both engines with identical association so every
     * intermediate double matches bit-for-bit.
     */
-  private[graft] def haversineM(lat1: Column, lng1: Column, lat2: Column, lng2: Column): Column = {
+  private def haversineM(lat1: Column, lng1: Column, lat2: Column, lng2: Column): Column = {
     val dLat = radians(lat2 - lat1) / 2.0
     val dLng = radians(lng2 - lng1) / 2.0
     val a = sin(dLat) * sin(dLat) +
@@ -177,10 +175,9 @@ object GeoOps {
     * tie order (then lowest stop_id) is engine-exact.
     */
   /** Deterministic synthetic stop dimension (hash-placed around the
-    * reference point) — shared by the batch nearest-stop query and its
-    * streaming twin so the two cannot drift.
+    * reference point) for the nearest-stop query.
     */
-  private[graft] def stopsDim(s: SparkSession, dir: String): DataFrame =
+  private def stopsDim(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "nation").select(
       col("n_nationkey").as("stop_id"),
       (lit(LatBase) + (PortableHash.hash64(concat(lit("s:"), col("n_nationkey").cast(StringType))) % 40000L)

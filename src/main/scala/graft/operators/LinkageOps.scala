@@ -60,9 +60,8 @@ object LinkageOps {
     * the [[BlockCap]] guard removed whole (0 ⇒ the output is
     * byte-identical to the uncapped query), `max_block_pop` is the
     * largest block population seen. Surfaced on every execution through
-    * `QueryExecution.observedMetrics` and any registered
-    * `QueryExecutionListener` (e.g. [[graft.Metrics.ObservationListener]],
-    * which warns when a cap fires) — no extra pass over the data.
+    * `QueryExecution.observedMetrics` and to any registered
+    * `QueryExecutionListener` — no extra pass over the data.
     */
   private[graft] val CapMetric = "graft.linkage.block_cap"
 

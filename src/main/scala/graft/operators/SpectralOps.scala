@@ -12,12 +12,11 @@ import graft.sources.Tables
   */
 object SpectralOps {
 
-  /** 2^20 fixed-point scale. Shared quantizer for every consumer of
-    * the feature profile (qFeatureQuantiles fences, DriftStream's
-    * in-row quantization) — one constant so batch and stream can never
-    * desync.
+  /** 2^20 fixed-point scale, the one quantizer for every consumer of
+    * the feature profile (the PCA rounds and the qFeatureQuantiles
+    * fences).
     */
-  val PcaQ = 1048576L
+  private val PcaQ = 1048576L
   private val PcaIters = 3    // fixed unrolled iterations (oracle CTEs)
   private val PcaDim = 64     // embeddings.embedding dimension
 

@@ -24,12 +24,6 @@ object FsUtil {
   private def fsFor(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** `FileSystem.exists` on whatever store the path's scheme names. */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    fsFor(spark, p).exists(p)
-  }
-
   /** The paths the glob pattern matches, empty when none does (S1
     * blob-list analog: "which blobs does this group have for this date
     * prefix?"). `globStatus` returns null when the parent does not exist.

@@ -621,6 +621,71 @@ class HfpLoadJobSpec extends SparkSuite {
     assert(second.values.forall(_ == 0L), second.toString)
   }
 
+  test("a failed loadDay leaves no Spark job running, and a re-run yields one clean run's tables") {
+    // the overlapped chains must not outlive the first failure: a
+    // sibling's append still running after loadDay has thrown would
+    // commit its rows after a re-run took its key snapshot, so the
+    // re-run would append them a second time
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import graft.sources.{DaySink, ParquetDaySink}
+    val root = writeArchive()
+    val sink = Files.createTempDirectory("hfpfailsink").toString
+    val ctx = sc.sparkContext
+    val active = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val marker = s"failed-load-marker-${java.util.UUID.randomUUID}"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          flushed.countDown()
+        else active.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = active.remove(e.jobId)
+    }
+    // the stopevent append (the first group's) throws once the three
+    // sibling appends have tasks running; those tasks hold for 8 s
+    // unless their job is cancelled
+    HfpLoadJobSpec.slowTasks.drainPermits()
+    val failing = new DaySink {
+      private val real = ParquetDaySink(sink)
+      def existingKeys(spark: org.apache.spark.sql.SparkSession, table: String,
+          days: String*) = real.existingKeys(spark, table, days: _*)
+      def append(df: org.apache.spark.sql.DataFrame, table: String): Unit =
+        if (table == "stopevent") {
+          val started = HfpLoadJobSpec.slowTasks.tryAcquire(3, 60, java.util.concurrent.TimeUnit.SECONDS)
+          throw new IllegalStateException(
+            if (started) "injected append failure" else "the sibling appends never started")
+        } else {
+          real.append(df.mapPartitions { rows =>
+            HfpLoadJobSpec.slowTasks.release()
+            val task = org.apache.spark.TaskContext.get()
+            val until = System.nanoTime() + 8000000000L
+            while (!task.isInterrupted() && System.nanoTime() < until) Thread.sleep(20)
+            if (task.isInterrupted()) throw new org.apache.spark.TaskKilledException("cancelled")
+            rows
+          }(org.apache.spark.sql.Encoders.row(df.schema)), table)
+        }
+    }
+    ctx.addSparkListener(listener)
+    try {
+      val e = intercept[IllegalStateException](HfpLoadJob.loadDay(sc, root, failing, date))
+      assert(e.getMessage == "injected append failure", e.getMessage)
+      // every event before the marker job's start has been delivered
+      ctx.setJobGroup(marker, marker)
+      try ctx.parallelize(Seq(1), 1).count() finally ctx.clearJobGroup()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the marker job")
+      assert(active.isEmpty, s"jobs still running after loadDay threw: $active")
+    } finally ctx.removeSparkListener(listener)
+
+    val clean = Files.createTempDirectory("hfpcleansink").toString
+    HfpLoadJob.loadDay(sc, root, clean, date)
+    HfpLoadJob.loadDay(sc, root, sink, date)
+    for (t <- Seq("stopevent", "otherevent", "vehicleposition", "unsignedevent")) {
+      def rows(dir: String) = spark.read.parquet(s"$dir/$t").collect().map(_.toString).sorted.toSeq
+      assert(rows(sink) == rows(clean), t)
+    }
+  }
+
   test("loadDay works when the archive and sink paths contain glob metacharacters") {
     // a base path with [ or { is literal directory naming, not pattern
     // syntax — the probe and the readers must agree on that (the old
@@ -801,12 +866,30 @@ class HfpLoadJobSpec extends SparkSuite {
       }
       assert(bad.getMessage.contains(key), bad.getMessage)
     }
+    // the DDL bootstrap flag takes the same rule: a value that is
+    // neither yes nor no must not silently skip the bootstrap
+    for (v <- Seq("on", "y", "2", "enabled")) {
+      val bad = intercept[IllegalArgumentException] {
+        HfpLoadJob.sinkFor("jdbc:postgresql://h/db",
+          creds + ("GRAFT_BOOTSTRAP_DDL" -> v), secrets.toString)
+      }
+      assert(bad.getMessage.contains("GRAFT_BOOTSTRAP_DDL"), bad.getMessage)
+    }
+    def bootstrap(v: String): Boolean =
+      HfpLoadJob.sinkFor("jdbc:postgresql://h/db",
+        creds + ("GRAFT_BOOTSTRAP_DDL" -> v), secrets.toString) match {
+        case j: graft.sources.JdbcDaySink => j.bootstrapDdl
+        case other => fail(s"expected JdbcDaySink, got $other")
+      }
+    Seq("1", "true", "YES", " Yes ").foreach(v => assert(bootstrap(v), v))
+    Seq("0", "false", "NO", " No ").foreach(v => assert(!bootstrap(v), v))
     // blank keeps the reference default, as unset does
     HfpLoadJob.sinkFor("jdbc:postgresql://h/db",
-      creds ++ Map("EVENT_BATCH_SIZE" -> " ", "INSERT_CONCURRENCY" -> ""),
+      creds ++ Map("EVENT_BATCH_SIZE" -> " ", "INSERT_CONCURRENCY" -> "",
+        "GRAFT_BOOTSTRAP_DDL" -> " "),
       secrets.toString) match {
       case j: graft.sources.JdbcDaySink =>
-        assert(j.batchSize == 1000 && j.numPartitions == 100)
+        assert(j.batchSize == 1000 && j.numPartitions == 100 && !j.bootstrapDdl)
       case other => fail(s"expected JdbcDaySink, got $other")
     }
     // the parquet twin needs no credentials at all
@@ -826,4 +909,11 @@ class HfpLoadJobSpec extends SparkSuite {
     assert(HfpLoadJob.validateDate("").isLeft)
     assert(HfpLoadJob.validateDate("not-a-date").isLeft)
   }
+}
+
+object HfpLoadJobSpec {
+  /** Started tasks of the slowed appends (local mode: tasks run in the
+    * suite's JVM, so they reach the same object).
+    */
+  val slowTasks = new java.util.concurrent.Semaphore(0)
 }

@@ -6,7 +6,7 @@ import graft.operators.HfpPipeline
 import graft.sources.ParquetDaySink
 
 /** Scale-pattern checks: partition-pruned re-reads of the routed sink
-  * output, and streaming dedup as the streaming twin of A1.
+  * output.
   */
 class ScaleSpec extends SparkSuite {
 
@@ -23,22 +23,6 @@ class ScaleSpec extends SparkSuite {
     val p = one.queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters: [isnotnull(oday"), p.take(1500))
     assert(one.count() > 0)
-  }
-
-  test("streaming dedup: dropDuplicates on the key stream") {
-    import graft.streaming.EventsStream
-    val events = EventsStream.readEvents(sc, sfDir, "events.parquet")
-    val deduped = events
-      .withColumn("dup_key", pmod(col("event_id"), lit(100)))
-      .withWatermark("ts", "1 hour")
-      .dropDuplicates("dup_key")
-    val q = EventsStream.runToMemory(spark, deduped, "dedup_test")
-    try {
-      val n = spark.sql("SELECT count(DISTINCT dup_key) c, count(*) n FROM dedup_test")
-        .collect()(0)
-      assert(n.getLong(0) == n.getLong(1)) // exactly one row per key
-      assert(n.getLong(1) == 100L)
-    } finally q.stop()
   }
 
   test("salted join equals the plain join under a forced shuffle plan") {

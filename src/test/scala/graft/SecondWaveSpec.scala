@@ -62,7 +62,17 @@ class SecondWaveSpec extends SparkSuite {
 
   test("q_entity_resolve cap signal: capped runs are observable, exact runs report zero") {
     val s = sc
-    val l = Metrics.attachObservations(s)
+    // delivery to listeners: the latest observed row per metric name
+    val seenRows =
+      new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        qe.observedMetrics.foreach { case (name, row) => seenRows.put(name, row) }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    s.listenerManager.register(l)
     try {
       // production cap at test scale: the metric must prove exactness
       val exact = graft.operators.LinkageOps.qEntityResolveCapped(
@@ -80,14 +90,12 @@ class SecondWaveSpec extends SparkSuite {
         graft.operators.LinkageOps.CapMetric)
       assert(m1.getAs[Long]("dropped_blocks") > 0L,
         "a firing cap must be observable, not silent")
-      // and it must reach listeners (the driver-log channel) too
+      // and it must reach listeners too
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      var seen = l.latest(graft.operators.LinkageOps.CapMetric)
-      while (seen.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(50); seen = l.latest(graft.operators.LinkageOps.CapMetric)
-      }
+      def seen = Option(seenRows.get(graft.operators.LinkageOps.CapMetric))
+      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
       assert(seen.nonEmpty, "observed metric must reach QueryExecutionListeners")
-    } finally Metrics.removeObservations(s, l)
+    } finally s.listenerManager.unregister(l)
   }
 
   test("q_bloom_skip: no false negatives, admits bounded by files") {

@@ -273,66 +273,4 @@ class SkewStressSpec extends SparkSuite {
       s"depth profile rows: ${kvDepth.length}")
     assert(secs < 120.0, f"megabyte-doc kernel pass took $secs%.1f s")
   }
-
-  test("stateful stream: a hot (hour, type) key holding half the corpus keeps state at open-key count, finals batch-equal") {
-    // the batch cases above stress join/aggregate FAN-OUT; a stateful
-    // stream's skew failure mode is different — per-key STATE blowup.
-    // IncrStream's state is one constant-size row per open (hour, type)
-    // whatever the row skew: 20k rows with 50% on one key must leave
-    // exactly open-key-count state rows, and the finals must equal the
-    // batch twin (the fold is cents-quantized, so the hot key's
-    // one-task burst cannot drift the total)
-    val s = sc
-    import graft.streaming.{EventsStream, IncrStream}
-    val in = java.nio.file.Files.createTempDirectory("skew-stream-in").toString
-    val base = 1704067200L // 2024-01-01T00:00:00Z
-    def mk(df: org.apache.spark.sql.DataFrame) = df.selectExpr(
-      "id AS event_id", "ts", "1L AS user_id", "event_type",
-      // CAST: a bare 0.01 writes DECIMAL(3,2) parquet, which the
-      // stream's DOUBLE read schema would misread as the unscaled int
-      "CAST(0.01 AS DOUBLE) AS value", "'{}' AS props")
-    val hot = mk(s.range(10000).selectExpr("id",
-      s"timestamp_seconds($base + 12*3600 + id % 3600) AS ts",
-      "'hot' AS event_type"))
-    val background = mk(s.range(10000).selectExpr("id + 100000 AS id",
-      s"timestamp_seconds($base + (10 + id % 3) * 3600 + id % 3500) AS ts",
-      "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS event_type"))
-    hot.unionAll(background).write.mode("overwrite").parquet(in)
-
-    val q = IncrStream.correctedHourlyTotals(s,
-        s.readStream.schema(EventsStream.eventSchema()).parquet(in))
-      .toDF().writeStream.outputMode("append")
-      .format("memory").queryName("skew_incr").start()
-    try {
-      q.processAllAvailable()
-      // 20,000 input rows, THREE open keys — the batch's own watermark
-      // (max ts − 10 min ≈ 12:50) already finalized and evicted the
-      // hour-10/11 keys, leaving hour-12's {hot, a, b}: state is
-      // key-bounded, not row-bounded, even with half the corpus on one
-      // key
-      val open = q.lastProgress.stateOperators(0).numRowsTotal
-      assert(open == 3L, s"state rows after the skewed batch: $open (want 3)")
-
-      // a far-future driver row finalizes every open key; state drops
-      // to exactly the driver's own key
-      s.range(1).selectExpr("999999L AS event_id",
-          s"timestamp_seconds($base + 34 * 3600) AS ts", "1L AS user_id",
-          "'z' AS event_type", "CAST(0.01 AS DOUBLE) AS value", "'{}' AS props")
-        .write.mode("append").parquet(in)
-      q.processAllAvailable()
-      val after = q.lastProgress.stateOperators(0).numRowsTotal
-      assert(after == 1L, s"state rows after finalization: $after (want 1)")
-
-      val finals = s.sql("SELECT * FROM skew_incr WHERE is_final").collect()
-        .map(r => (r.getTimestamp(0).toString.take(13), r.getString(1)) ->
-          (r.getLong(3), r.getLong(4))).toMap
-      val want = IncrStream.batchHourlyTotals(s.read.parquet(in)
-          .where(col("event_type") =!= "z")).collect()
-        .map(r => (r.getTimestamp(0).toString.take(13), r.getString(1)) ->
-          (r.getLong(2), r.getLong(3))).toMap
-      assert(finals == want, s"finals=$finals batch=$want")
-      assert(finals(("2024-01-01 12", "hot")) == ((10000L, 10000L)),
-        "the hot key's final must carry the full half-corpus exactly")
-    } finally q.stop()
-  }
 }
